@@ -1,2 +1,2 @@
 """DataFrame → DataFrame operators (parse / enrich / route / aggregate /
-dedup / similarity / multimodal)."""
+dedup / similarity / curation)."""

@@ -119,9 +119,6 @@ def cheap_guards(text: Column) -> Column:
     )
 
 
-_cheap_guards = cheap_guards  # back-compat alias
-
-
 def ts_shape_ok(text: Column) -> Column:
     """Timestamp probe for shape-valid 5424 headers: NILVALUE or a
     calendar-valid RFC3339 instant.  Every sub-expression is TOTAL
@@ -169,14 +166,6 @@ def groups_str_5424(text: Column) -> Column:
 
 def split_groups(s: Column) -> Column:
     return F.split(s, SEP, -1)
-
-
-def groups_3164(text: Column) -> Column:
-    return split_groups(groups_str_3164(text))
-
-
-def groups_5424(text: Column) -> Column:
-    return split_groups(groups_str_5424(text))
 
 
 def native_3164_fields(g: Column, ref_now: pd.Timestamp) -> dict:

@@ -47,7 +47,7 @@ _FRAMED_RE = r"^[0-9]+ "
 # inference (an all-None column collapsing to float64 turns every None
 # into nan) — and the Arrow serializer then crashes trying to iterate a
 # float as the array type.  One scrub at the UDF boundary guarantees the
-# contract for every engine / fast-slow split / batch mixture.
+# contract for every engine and batch mixture.
 _OBJECT_COLS = [
     "format", "host", "app", "pid", "msgid", "structured_data",
     "message", "err_code",

@@ -86,42 +86,10 @@ def _build_ts(year: pd.Series, mon: pd.Series, day, hh, mm, ss) -> pd.Series:
 
 
 def parse_rfc3164_batch(
-    texts: pd.Series,
-    ref_now: pd.Timestamp | None = None,
-    use_fast: bool = True,
-) -> pd.DataFrame:
-    """Parse one Arrow batch of RFC3164 lines → parsed-field DataFrame.
-
-    Strictly-canonical lines take the RE2 fast path (operators/fastpath);
-    everything else (and every line when ``use_fast=False``) goes through
-    the exact staged parser below.  Both produce identical results —
-    pinned by tests/test_fastpath.py.
-    """
-    ref_now = ref_now if ref_now is not None else DEFAULT_REF_NOW
-    s = texts.fillna("").astype(str).reset_index(drop=True)
-    if use_fast and len(s):
-        from go_parsesyslog_spark.operators.fastpath import fast_rfc3164
-
-        fast_df, slow = fast_rfc3164(s, ref_now)
-        if fast_df is not None:
-            if not slow.any():
-                return fast_df.reset_index(drop=True)
-            if slow.all():
-                return parse_rfc3164_exact(s, ref_now)
-            slow_out = parse_rfc3164_exact(s[slow], ref_now)
-            slow_out.index = np.where(slow)[0]
-            from go_parsesyslog_spark.operators.fastpath import (
-                combine_fast_slow,
-            )
-
-            return combine_fast_slow(fast_df, slow_out)
-    return parse_rfc3164_exact(s, ref_now)
-
-
-def parse_rfc3164_exact(
     texts: pd.Series, ref_now: pd.Timestamp | None = None
 ) -> pd.DataFrame:
-    """The exact staged vectorized parser (reference-quirk complete)."""
+    """Parse one Arrow batch of RFC3164 lines → parsed-field DataFrame
+    (the exact staged parser, reference-quirk complete)."""
     ref_now = ref_now if ref_now is not None else DEFAULT_REF_NOW
     s = texts.fillna("").astype(str)
     s = s.reset_index(drop=True)

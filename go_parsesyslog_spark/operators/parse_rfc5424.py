@@ -168,35 +168,9 @@ def _parse_sd(t: str):
     return sds, len(sd) + 1, None  # +1 = the re-read terminating space
 
 
-def parse_rfc5424_batch(texts: pd.Series, use_fast: bool = True) -> pd.DataFrame:
-    """Parse one Arrow batch of octet-framed RFC5424 messages.
-
-    Strictly-canonical ASCII frames take the RE2 fast path
-    (operators/fastpath); everything else goes through the exact staged
-    parser.  Identical results — pinned by tests/test_fastpath.py.
-    """
-    s = texts.fillna("").astype(str).reset_index(drop=True)
-    if use_fast and len(s):
-        from go_parsesyslog_spark.operators.fastpath import fast_rfc5424
-
-        fast_df, slow = fast_rfc5424(s)
-        if fast_df is not None:
-            if not slow.any():
-                return fast_df.reset_index(drop=True)
-            if slow.all():
-                return parse_rfc5424_exact(s)
-            slow_out = parse_rfc5424_exact(s[slow])
-            slow_out.index = np.where(slow)[0]
-            from go_parsesyslog_spark.operators.fastpath import (
-                combine_fast_slow,
-            )
-
-            return combine_fast_slow(fast_df, slow_out)
-    return parse_rfc5424_exact(s)
-
-
-def parse_rfc5424_exact(texts: pd.Series) -> pd.DataFrame:
-    """The exact staged vectorized parser (reference-quirk complete)."""
+def parse_rfc5424_batch(texts: pd.Series) -> pd.DataFrame:
+    """Parse one Arrow batch of octet-framed RFC5424 messages (the exact
+    staged parser, reference-quirk complete)."""
     s = texts.fillna("").astype(str).reset_index(drop=True)
     n = len(s)
     idx = s.index

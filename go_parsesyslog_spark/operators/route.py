@@ -130,14 +130,15 @@ def compute_hot_set(
         .localCheckpoint()
     )
     stats = conv_counts.agg(
-        F.avg("_rows").alias("mean"),
+        F.sum("_rows").alias("total"),
         F.count(F.lit(1)).alias("n"),
         F.max("_rows").alias("mx"),
     ).collect()[0]
+    total_rows = int(stats["total"] or 0)
     if hot_threshold is None:
-        hot_threshold = max(64, int(4 * (stats["mean"] or 1)))
+        mean = total_rows / stats["n"] if stats["n"] else 1
+        hot_threshold = max(64, int(4 * mean))
     max_rows = int(stats["mx"] or 0)
-    total_rows = int(round((stats["mean"] or 0) * (stats["n"] or 0)))
     hot = conv_counts.filter(F.col("_rows") > hot_threshold).select("conv_id")
     head = [r["conv_id"] for r in hot.limit(literal_cap + 1).collect()]
     if len(head) <= literal_cap:
@@ -154,46 +155,3 @@ def compute_hot_set(
     return {"threshold": hot_threshold, "count": n, "ids": None,
             "path": spill_path,
             "max_conv_rows": max_rows, "total_rows": total_rows}
-
-
-def hot_conv_ids(
-    df: DataFrame, hot_threshold: int | None = None, cap: int = 100_000
-) -> tuple[list, int]:
-    """Deprecated small-scale helper (kept for API compat): collect the
-    hot set as a list.  Prefer ``compute_hot_set`` — it spills oversized
-    hot sets for the broadcast-join route instead of truncating."""
-    conv_counts = df.groupBy("conv_id").agg(F.count(F.lit(1)).alias("_rows"))
-    if hot_threshold is None:
-        mean = conv_counts.agg(F.avg("_rows")).collect()[0][0]
-        hot_threshold = max(64, int(4 * (mean or 1)))
-    hot = conv_counts.filter(F.col("_rows") > hot_threshold)
-    return [r["conv_id"] for r in hot.limit(cap).collect()], hot_threshold
-
-
-def write_routed(
-    df: DataFrame,
-    out_root: str,
-    shuffle_partitions: int | None = None,
-) -> None:
-    """Fan-out partitioned write: valid rows under ``routed/`` partitioned
-    by (severity_class, conv_bucket); err rows under ``dlq/`` partitioned
-    by err_code.  The repartition key includes the salt so hot cells are
-    written by multiple tasks (multiple files per dir — fine for
-    columnar readers, fatal to avoid stragglers)."""
-    spark = df.sparkSession
-    n = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    valid = df.filter(F.col("err_code").isNull())
-    (
-        valid.repartition(n, "severity_class", "conv_bucket", "salt")
-        .write.mode("overwrite")
-        .partitionBy("severity_class", "conv_bucket")
-        .parquet(f"{out_root}/routed")
-    )
-    dlq = df.filter(F.col("err_code").isNotNull())
-    (
-        dlq.repartition("err_code")
-        .write.mode("overwrite")
-        .partitionBy("err_code")
-        .parquet(f"{out_root}/dlq")
-    )

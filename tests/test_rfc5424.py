@@ -210,3 +210,55 @@ def test_sd_flat_map_view(spark):
     assert m["meta@123/foo"] == "bar"
     assert m["example@9999/a"] == "b"
     assert m["example@9999/c"] == "d"
+
+
+def test_dispatch_batch_keeps_object_dtype():
+    """Regression: a batch where a format's rows all die at an early
+    stage leaves all-None object columns, and concatenating the two
+    formats' frames lets pandas collapse such a column to float64 —
+    every None becomes a float NaN, which the Arrow serializer then
+    tries to iterate as a list and crashes the job.  After the UDF
+    boundary scrub, all object-expected columns stay object-dtyped with
+    only None/list/str cells, for every mixture of formats and
+    outcomes."""
+    from go_parsesyslog_spark.operators.parse import _dispatch_batch
+
+    batches = [
+        # every row invalid (frames that die at early stages)
+        ["38 <>1 2025-10-21T15:30:00Z h a p m - bad"],
+        ["40 <34>1 2025-13-01T00:00:00Z h a p m - bad"],
+        # invalid + valid 5424
+        ["38 <>1 2025-10-21T15:30:00Z h a p m - bad",
+         "47 <34>1 2024-01-02T03:04:05Z h a p m - hello frame x"],
+        # invalid 5424 + valid 3164 (exercises the dispatch concat)
+        ["40 <34>1 2025-13-01T00:00:00Z h a p m - bad",
+         "<34>Oct 11 22:14:15 h a: x"],
+    ]
+    for lines in batches:
+        out = _dispatch_batch(pd.Series(lines), None)
+        for col in ("structured_data", "message", "host", "app", "pid",
+                    "msgid", "err_code"):
+            assert out[col].dtype == object, (col, lines)
+            for v in out[col]:
+                assert v is None or isinstance(v, (list, str)), (
+                    col, v, lines
+                )
+
+
+def test_cli_demo():
+    """A20 parity: the stdin demo parses and pretty-prints (cmd/
+    stdin-parser/main.go:19-65)."""
+    import io
+    import sys as _sys
+
+    from go_parsesyslog_spark import cli
+
+    old = _sys.stdin
+    _sys.stdin = io.StringIO(
+        "<34>Oct 11 22:14:15 mymachine su: hi\n"
+    )
+    try:
+        rc = cli.main([])
+    finally:
+        _sys.stdin = old
+    assert rc == 0

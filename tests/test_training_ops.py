@@ -1,6 +1,5 @@
 """Training-data pipeline operators: dedup (exact/minhash/simhash/
-jaccard), similarity search (brute force vs LSH), text analysis,
-multimodal plumbing."""
+jaccard), similarity search (brute force vs LSH), text analysis."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -631,351 +630,3 @@ def test_language_id(spark):
     assert out[4] == "es"
     assert out[5] == "zh"
     assert out[6] == "unknown"
-
-
-def test_multimodal_real_decoders():
-    """The WAV and BMP decode kernels are REAL (pure numpy): a
-    synthesized 440 Hz tone must come back with ~440 Hz dominant
-    frequency and the advertised RMS; a synthesized BMP must decode to
-    the exact pixel array and sane luma features."""
-    import numpy as np
-
-    from go_parsesyslog_spark.operators.multimodal import (
-        audio_features,
-        decode_bmp,
-        image_features,
-        resize_nearest,
-        synth_bmp,
-        synth_wav,
-    )
-
-    # ADVICE r2: a structurally valid WAV declaring rate=0 must raise
-    # ValueError (catchable per-row), never ZeroDivisionError
-    import struct as _struct
-
-    import pytest as _pytest
-
-    bad = bytearray(synth_wav(freq_hz=440.0, seconds=0.01, rate=8000))
-    fmt_at = bad.find(b"fmt ") + 8
-    bad[fmt_at + 4: fmt_at + 8] = _struct.pack("<I", 0)  # sample_rate = 0
-    with _pytest.raises(ValueError, match="corrupt WAV"):
-        audio_features(bytes(bad))
-
-    wav = synth_wav(freq_hz=440.0, seconds=0.5, rate=8000, amplitude=0.5)
-    dur, rate, rms, peak, zcr, dom, centroid, mean = audio_features(wav)
-    assert abs(dur - 0.5) < 1e-6 and rate == 8000.0
-    assert abs(dom - 440.0) < 4.0  # FFT bin resolution at 0.5 s = 2 Hz
-    assert abs(rms - 0.5 / np.sqrt(2)) < 0.01  # sine RMS = A/√2
-    assert 0.49 < peak <= 0.51
-
-    bmp = synth_bmp(16, 12, seed=3)
-    img = decode_bmp(bmp)
-    assert img.shape == (12, 16, 3)
-    # gradient channel (R) decodes exactly: row 0 starts dark
-    assert img[0, 0, 0] < img[11, 15, 0]
-    f = image_features(bmp)
-    assert f[0] == 16.0 and f[1] == 12.0
-    assert 0.0 < f[2] < 1.0  # mean luma normalized
-    assert abs(sum(f[4:12]) - 1.0) < 1e-6  # histogram sums to 1
-    # the resize kernel: constant plane stays constant at any size
-    plane = np.full((9, 7), 5.0)
-    assert (resize_nearest(plane, 3, 4) == 5.0).all()
-
-
-def test_png_decode_roundtrip():
-    """PNG decode is REAL (numpy + stdlib zlib): synthesized RGB images
-    encoded with every scanline filter type (None/Sub/Up/Average/Paeth)
-    must decode to the exact source pixel array, and the feature vector
-    must match the BMP path's contract."""
-    import numpy as np
-
-    from go_parsesyslog_spark.operators.multimodal import (
-        decode_png,
-        image_features,
-        synth_png,
-    )
-
-    # per-filter roundtrip: one filter type for every scanline
-    for f in range(5):
-        png = synth_png(13, 9, seed=f, filters=[f])
-        want = np.random.default_rng(f).integers(
-            0, 256, (9, 13, 3), dtype=np.uint8
-        )
-        got = decode_png(png)
-        assert got.shape == (9, 13, 3)
-        assert (got == want).all(), f"filter {f} mismatch"
-    # mixed filters (cycling 0..4) + feature vector shape/pins
-    png = synth_png(16, 12, seed=3)
-    img = decode_png(png)
-    feats = image_features(png)
-    assert feats[0] == 16.0 and feats[1] == 12.0
-    luma = (0.299 * img[:, :, 0] + 0.587 * img[:, :, 1]
-            + 0.114 * img[:, :, 2])
-    assert abs(feats[2] - float(luma.mean()) / 255.0) < 1e-9
-    # corrupt payloads raise ValueError (per-row catchable), never crash
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        decode_png(b"\x89PNG\r\n\x1a\nnot really")
-    with _pytest.raises(ValueError):
-        decode_png(png[:40])
-
-
-def test_jpeg_decode_roundtrip():
-    """Baseline JPEG decode is REAL (pure numpy Huffman + IDCT):
-    encoding a known pixel array at near-lossless quality and decoding
-    it back must reproduce the pixels within the color-transform
-    rounding budget — across 4:4:4, grayscale, 4:2:0 subsampling and
-    restart-marker streams.  mp4/h264 video remains the only stub."""
-    import numpy as np
-
-    from go_parsesyslog_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-    from go_parsesyslog_spark.operators.multimodal import image_features
-
-    rng = np.random.default_rng(5)
-    x = np.linspace(0, 255, 24)[None, :]
-    y = np.linspace(0, 255, 18)[:, None]
-    img = np.stack([(x + y) / 2, np.flipud((x + y) / 2),
-                    np.tile(x, (18, 1))], axis=2)
-    img = np.clip(img + rng.normal(0, 4, img.shape), 0, 255).astype(np.uint8)
-
-    # 4:4:4 near-lossless: per-pixel error bounded by YCbCr rounding
-    dec = decode_jpeg(encode_jpeg(img))
-    assert dec.shape == (18, 24, 3)
-    assert np.abs(dec.astype(int) - img.astype(int)).max() <= 8
-
-    # grayscale
-    g = np.clip((x + y) / 2 + rng.normal(0, 3, (18, 24)), 0, 255).astype(
-        np.uint8
-    )
-    dg = decode_jpeg(encode_jpeg(g))
-    assert dg.shape == (18, 24, 3)
-    assert np.abs(dg[:, :, 0].astype(int) - g.astype(int)).max() <= 4
-
-    # 4:2:0 (multi-block MCUs + chroma upsample) — luma stays tight,
-    # chroma averaged over 2×2
-    d420 = decode_jpeg(encode_jpeg(img, subsample=True))
-    assert d420.shape == (18, 24, 3)
-    luma = lambda a: (0.299 * a[:, :, 0] + 0.587 * a[:, :, 1]  # noqa: E731
-                      + 0.114 * a[:, :, 2])
-    assert np.abs(luma(d420) - luma(img)).max() <= 8
-
-    # restart markers + odd (non-MCU-aligned) dims
-    odd = img[:17, :23]
-    drst = decode_jpeg(encode_jpeg(odd, restart_interval=2))
-    assert drst.shape == (17, 23, 3)
-    assert np.abs(drst.astype(int) - odd.astype(int)).max() <= 8
-
-    # the image_features dispatch path accepts JPEG magic
-    feats = image_features(encode_jpeg(img))
-    assert feats[0] == 24.0 and feats[1] == 18.0
-
-    # hostile/corrupt payloads are per-row ValueErrors
-    with pytest.raises(ValueError, match="SOI"):
-        decode_jpeg(b"nope")
-    with pytest.raises(ValueError):
-        decode_jpeg(encode_jpeg(img)[:60])
-    import struct as _struct
-
-    huge = (b"\xff\xd8\xff\xc0" + _struct.pack(">H", 11)
-            + _struct.pack(">BHHB", 8, 60000, 60000, 1) + b"\x01\x11\x00"
-            + b"\xff\xd9")
-    with pytest.raises(ValueError, match="out of bounds"):
-        decode_jpeg(huge)
-    # hostile 0 sampling factor must be a ValueError in the SOF
-    # handler, not a ZeroDivisionError in the upsampler
-    zero_samp = (b"\xff\xd8\xff\xc0" + _struct.pack(">H", 11)
-                 + _struct.pack(">BHHB", 8, 16, 16, 1) + b"\x01\x01\x00"
-                 + b"\xff\xd9")
-    with pytest.raises(ValueError, match="sampling factor"):
-        decode_jpeg(zero_samp)
-
-
-def test_avi_mjpeg_video_roundtrip():
-    """MJPEG-AVI video decode is REAL (RIFF walk + the numpy JPEG
-    decoder per frame): an encoded frame sequence round-trips to the
-    source pixels within JPEG tolerance, temporal features see the
-    planted motion, and corrupt/oversized payloads are per-row
-    ValueErrors."""
-    import numpy as np
-
-    from go_parsesyslog_spark.operators.avi import (
-        AVI_MAX_FRAMES,
-        decode_avi_frames,
-        encode_avi,
-        parse_avi,
-        video_features,
-    )
-
-    rng = np.random.default_rng(9)
-    x = np.linspace(0, 255, 24)[None, :, None]
-    frames = [
-        np.ascontiguousarray(np.clip(
-            x + i * 20 + rng.normal(0, 3, (18, 24, 3)), 0, 255
-        ).astype(np.uint8))
-        for i in range(6)
-    ]
-    avi = encode_avi(frames, fps=10)
-    meta = parse_avi(avi)
-    assert meta["total_frames"] == 6 and meta["us_per_frame"] == 100000
-    dec = decode_avi_frames(avi)
-    assert len(dec) == 6
-    for a, b in zip(frames, dec):
-        assert np.abs(a.astype(int) - b.astype(int)).max() <= 8
-    fv = video_features(avi)
-    assert fv[0] == 6.0 and fv[1] == 10.0 and fv[2] == 24.0 and fv[3] == 18.0
-    assert fv[9] > 0.05  # planted brightness motion is visible
-    with pytest.raises(ValueError, match="RIFF/AVI"):
-        parse_avi(b"not a video")
-    with pytest.raises(ValueError, match="no MJPEG frames"):
-        parse_avi(b"RIFF\x04\x00\x00\x00AVI ")
-    # long-but-valid video: frame list truncates at AVI_MAX_FRAMES
-    # (prefix feature extraction) instead of erroring the whole row
-    import struct as _struct
-
-    def chunk(cc, body):
-        pad = b"\x00" if len(body) % 2 else b""
-        return cc + _struct.pack("<I", len(body)) + body + pad
-
-    movi = b"".join(chunk(b"00dc", b"x") for _ in range(AVI_MAX_FRAMES + 7))
-    long_avi = b"RIFF" + _struct.pack(
-        "<I", 4 + 12 + len(movi)
-    ) + b"AVI " + chunk(b"LIST", b"movi" + movi)
-    meta_long = parse_avi(long_avi)
-    assert len(meta_long["frames"]) == AVI_MAX_FRAMES
-    assert meta_long["truncated"] is True
-    assert meta["truncated"] is False
-
-
-def test_mp4_metadata_parse():
-    """mp4 METADATA parses codec-free (box walk: ftyp/mvhd/tkhd/stsd)
-    — the routing metadata a media pipeline needs without pixel decode;
-    only h264 pixel decode remains stubbed.  Hand-built ISO-BMFF
-    fixture with both mvhd versions + hostile payloads."""
-    import struct as _s
-
-    from go_parsesyslog_spark.operators.avi import parse_mp4_meta
-
-    def box(t, body):
-        return _s.pack(">I", 8 + len(body)) + t + body
-
-    ftyp = box(b"ftyp", b"isom" + _s.pack(">I", 512) + b"isomavc1")
-    mvhd = box(b"mvhd", bytes(12) + _s.pack(">II", 1000, 5500) + bytes(80))
-    # spec-conformant v0 tkhd body: 84 bytes total — 4 ver+flags,
-    # 20 times/id/dur, 16 layer block, 36 matrix, then 16.16 w/h at +76
-    tkhd = box(b"tkhd", bytes(76) + _s.pack(">II", 640 << 16, 360 << 16))
-    stsd = box(b"stsd", bytes(4) + _s.pack(">I", 1)
-               + box(b"avc1", bytes(70)))
-    trak = box(b"trak", tkhd + box(b"mdia", box(b"minf", box(b"stbl",
-                                                             stsd))))
-    meta = parse_mp4_meta(ftyp + box(b"moov", mvhd + trak))
-    assert meta == {"brand": "isom", "duration_ms": 5500, "n_tracks": 1,
-                    "width": 640, "height": 360, "codecs": ["avc1"]}
-    # 64-bit duration (mvhd version 1)
-    mvhd1 = box(b"mvhd", bytes([1]) + bytes(19)
-                + _s.pack(">IQ", 600, 1200) + bytes(80))
-    assert parse_mp4_meta(
-        ftyp + box(b"moov", mvhd1))["duration_ms"] == 2000
-    # v1 tkhd: 64-bit times/duration push w/h to +88 from the version
-    # byte (96-byte body)
-    tkhd1 = box(b"tkhd", bytes([1]) + bytes(87)
-                + _s.pack(">II", 1920 << 16, 1080 << 16))
-    meta1 = parse_mp4_meta(ftyp + box(b"moov", box(b"trak", tkhd1)))
-    assert (meta1["width"], meta1["height"]) == (1920, 1080)
-    with pytest.raises(ValueError):
-        parse_mp4_meta(b"xx")
-    with pytest.raises(ValueError, match="corrupt mp4 box"):
-        parse_mp4_meta(b"\x00\x00\x00\x03bad" + bytes(8))
-
-
-def test_png_hostile_payloads_bounded(spark):
-    """ADVICE r3: untrusted PNG headers/streams must not allocate
-    unbounded memory or escape the per-row (ok, err) contract —
-    a GB-dimension IHDR is rejected before allocation, a corrupt IDAT
-    is a ValueError, and one bad row never kills the job."""
-    import struct as _struct
-
-    from go_parsesyslog_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _PNG_SIG,
-        decode_png,
-        extract_features,
-        synth_png,
-    )
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        import binascii
-
-        crc = binascii.crc32(ctype + data) & 0xFFFFFFFF
-        return (_struct.pack(">I", len(data)) + ctype + data
-                + _struct.pack(">I", crc))
-
-    # hostile header: 1 million × 1 million px → rejected pre-alloc
-    huge = (_PNG_SIG
-            + chunk(b"IHDR", _struct.pack(">IIBBBBB",
-                                          1_000_000, 1_000_000, 8, 2, 0, 0, 0))
-            + chunk(b"IDAT", b"\x00" * 16) + chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="out of bounds"):
-        decode_png(huge)
-    # corrupt IDAT: zlib garbage → ValueError, not zlib.error
-    good = synth_png(8, 8, seed=1)
-    bad_idat = (_PNG_SIG
-                + chunk(b"IHDR", _struct.pack(">IIBBBBB", 8, 8, 8, 2, 0, 0, 0))
-                + chunk(b"IDAT", b"not a zlib stream at all")
-                + chunk(b"IEND", b""))
-    with pytest.raises(ValueError, match="corrupt PNG IDAT"):
-        decode_png(bad_idat)
-    # one corrupt row among good rows → (ok=False, err) row, job lives
-    rows = [
-        (0, "image", "image/png", bytearray(good), 8, 8, None),
-        (1, "image", "image/png", bytearray(bad_idat), 8, 8, None),
-        (2, "image", "image/png", bytearray(huge), 8, 8, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    got = {r["media_id"]: r for r in
-           extract_features(media, fake=False).collect()}
-    assert got[0]["ok"] and got[0]["feature"] is not None
-    assert not got[1]["ok"] and "IDAT" in got[1]["err"]
-    assert not got[2]["ok"] and "out of bounds" in got[2]["err"]
-
-
-def test_multimodal_plumbing(spark):
-    from go_parsesyslog_spark.operators.multimodal import (
-        extract_features,
-        make_fake_media,
-        sample_video_frames,
-    )
-
-    media = make_fake_media(spark, n=30)
-    feats = extract_features(media, fake=True)
-    rows = feats.collect()
-    assert len(rows) == 30
-    assert all(r["ok"] for r in rows)
-    # wav → 8-dim real, bmp/png/jpeg → 16-dim real, MJPEG-AVI video →
-    # 12-dim real temporal features, mp4 video → 8-dim deterministic fake
-    mimes = {r["media_id"]: r["mime"]
-             for r in media.select("media_id", "mime").collect()}
-    for r in rows:
-        if r["kind"] == "video":
-            want = 12 if mimes[r["media_id"]] == "video/x-msvideo" else 8
-        else:
-            want = {"audio": 8, "image": 16}[r["kind"]]
-        assert len(r["feature"]) == want, (r["kind"], mimes[r["media_id"]])
-    # determinism: same payload → same feature
-    again = {r["media_id"]: r["feature"] for r in
-             extract_features(media, fake=True).collect()}
-    for r in rows:
-        assert again[r["media_id"]] == r["feature"]
-    # with fake=False, WAV/BMP/JPEG *and MJPEG-AVI* decode FOR REAL;
-    # only the codec-requiring mp4 rows surface a per-row error
-    strict = extract_features(media, fake=False).collect()
-    for r in strict:
-        if r["kind"] == "video" and mimes[r["media_id"]] == "video/mp4":
-            assert not r["ok"] and r["err"]
-        else:
-            assert r["ok"], (r["kind"], r["err"])
-    frames = sample_video_frames(media, every_ms=400)
-    assert frames.count() > media.filter(F.col("kind") == "video").count()
