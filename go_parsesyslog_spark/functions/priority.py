@@ -10,13 +10,12 @@ Reference: ``/root/reference/priority.go``.
 All derivations here are native Catalyst expressions (whole-stage
 codegen'd, no Python on the hot path).  The name lookup uses
 ``F.element_at`` on a literal array — a constant-folded in-memory table,
-cheaper than even a broadcast join.  Tiny dimension DataFrames are also
-provided for the enrichment-join variant and for DuckDB oracles.
+cheaper than even a broadcast join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # priority.go:81-134 — canonical facility names, index = facility code.
@@ -39,16 +38,6 @@ UNKNOWN = "UNKNOWN"  # priority.go:131-133, :156
 # sev 0-2 → emergency, 3 → error, 4-5 → warn, 6-7 → info.
 SEVERITY_CLASSES = ["emergency", "emergency", "emergency", "error",
                     "warn", "warn", "info", "info"]
-
-
-def facility_from_prio(prio: Column) -> Column:
-    """``FacilityFromPrio`` — priority.go:60-62."""
-    return F.shiftright(prio, 3)
-
-
-def severity_from_prio(prio: Column) -> Column:
-    """``SeverityFromPrio`` — priority.go:65-67 (mask 0x07, :8)."""
-    return prio.bitwiseAND(F.lit(7))
 
 
 def facility_name(facility: Column) -> Column:
@@ -77,15 +66,3 @@ def severity_class(severity: Column) -> Column:
     arr = F.array(*[F.lit(x) for x in SEVERITY_CLASSES])
     idx = F.when((severity >= 0) & (severity <= 7), severity + 1)
     return F.element_at(arr, idx)
-
-
-def facility_names_dim(spark: SparkSession) -> DataFrame:
-    """24-row dimension table (broadcast-join variant of the lookup)."""
-    rows = [(i, n) for i, n in enumerate(FACILITY_NAMES)]
-    return spark.createDataFrame(rows, "facility int, facility_name string")
-
-
-def severity_names_dim(spark: SparkSession) -> DataFrame:
-    """8-row dimension table (broadcast-join variant of the lookup)."""
-    rows = [(i, n) for i, n in enumerate(SEVERITY_NAMES)]
-    return spark.createDataFrame(rows, "severity int, severity_name string")

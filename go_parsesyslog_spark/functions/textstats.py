@@ -97,14 +97,6 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def rolling_fingerprint(text: Column, window: int = 64) -> Column:
-    """Content-defined document fingerprint: xxhash64 of the
-    whitespace-normalized text (cheap, JVM-side).  For shift-robust
-    fingerprints use dedup.minhash_signatures."""
-    norm = F.regexp_replace(F.lower(text), r"\s+", " ")
-    return F.xxhash64(norm)
-
-
 def language_id_udf():
     """Vectorized pandas UDF: text → predicted lang code
     {en,de,fr,es,zh,unknown} via marker-hit counting + CJK ratio."""

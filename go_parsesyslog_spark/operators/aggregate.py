@@ -168,22 +168,6 @@ def group_quantiles(
     )
 
 
-def merge_sink_metrics(partials: DataFrame) -> DataFrame:
-    """Re-aggregate per-chunk partial metrics into final totals.
-
-    approx_convs is a per-chunk estimate; merged via max (lower bound)
-    — exact distincts live in the final verification query, not here.
-    """
-    return (
-        partials.groupBy("sink_id", "severity_class", "window_start", "window_end")
-        .agg(
-            F.sum("turn_count").alias("turn_count"),
-            F.max("approx_convs").alias("approx_convs"),
-            F.sum("total_msg_bytes").alias("total_msg_bytes"),
-        )
-    )
-
-
 def resample_ffill(
     df: DataFrame,
     key_col: str,

@@ -1,19 +1,19 @@
-"""Enrichment operator: broadcast hash-join lookups + name derivations.
+"""Enrichment operator: dimension lookups + name derivations.
 
-The north-star pipeline mandates two broadcast lookups on the parsed
-stream — role→facility map and tool→app-name registry (FIXTURES.md §4)
-— plus the facility/severity name columns from the reference's tables
-(/root/reference/priority.go:81-158).
+The north-star pipeline mandates two lookups on the parsed stream —
+role→facility map and tool→app-name registry (FIXTURES.md §4) — plus
+the facility/severity name columns from the reference's tables
+(reference ``priority.go:81-158``).
 
-Scale notes: both dims are O(10) rows → ``F.broadcast`` forces a
-broadcast hash join (no shuffle of the fact side); the name lookups use
-constant-folded literal arrays (cheaper still — zero join).  The whole
-enrich stage therefore adds no exchanges to the plan.
+Scale notes: both dims are O(10) rows, so each lookup is a
+``try_element_at`` over a literal map, the same constant-folded
+in-memory table the name columns use.  No join, no broadcast job: the
+whole enrich stage is one narrow projection fused into the parse stage.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_parsesyslog_spark.functions.priority import (
@@ -43,35 +43,34 @@ TOOL_APP_REGISTRY = [
 ]
 
 
-def role_facility_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        ROLE_FACILITY_MAP, "role string, role_facility int, role_class string"
-    )
-
-
-def tool_app_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        TOOL_APP_REGISTRY, "tool string, app_name string, app_tier string"
-    )
+def _lookup(rows: list[tuple], key: str, pos: int) -> Column:
+    """``key`` → column ``pos`` of ``rows`` as a literal-map lookup:
+    constant-folded, zero join; an unknown or NULL key yields NULL."""
+    m = F.create_map(*[F.lit(x) for r in rows for x in (r[0], r[pos])])
+    return F.try_element_at(m, F.col(key))
 
 
 def enrich(df: DataFrame, spark: SparkSession | None = None) -> DataFrame:
-    """Attach name columns + broadcast-join the two lookup dims.
+    """Attach the name columns and the two lookup dims.
 
     Input: output of ``parse_logs`` (must carry role/tool/severity/
     facility columns).  Output adds: facility_name, severity_name,
     severity_class, role_facility, role_class, app_name, app_tier.
+    Column order is the left-join order callers rely on: ``tool`` and
+    ``role`` lead, the lookups trail.  ``spark`` is unused (kept for
+    callers that pass it).
     """
-    spark = spark or df.sparkSession
-    out = df.withColumns(
-        {
-            "facility_name": facility_name(F.col("facility")),
-            "severity_name": severity_name(F.col("severity")),
-            "severity_class": severity_class(F.col("severity")),
-        }
-    )
+    cols = {
+        "facility_name": facility_name(F.col("facility")),
+        "severity_name": severity_name(F.col("severity")),
+        "severity_class": severity_class(F.col("severity")),
+    }
     if "role" in df.columns:
-        out = out.join(F.broadcast(role_facility_dim(spark)), "role", "left")
+        cols["role_facility"] = _lookup(ROLE_FACILITY_MAP, "role", 1)
+        cols["role_class"] = _lookup(ROLE_FACILITY_MAP, "role", 2)
     if "tool" in df.columns:
-        out = out.join(F.broadcast(tool_app_dim(spark)), "tool", "left")
-    return out
+        cols["app_name"] = _lookup(TOOL_APP_REGISTRY, "tool", 1)
+        cols["app_tier"] = _lookup(TOOL_APP_REGISTRY, "tool", 2)
+    lead = [c for c in ("tool", "role") if c in df.columns]
+    out = df.withColumns(cols)
+    return out.select(*lead, *[c for c in out.columns if c not in lead])

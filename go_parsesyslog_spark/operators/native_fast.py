@@ -1,14 +1,17 @@
 """JVM-native (Catalyst) fast path for canonical wire messages.
 
-Why this exists: the Arrow JVM↔Python transfer layer collapses above
-~20 concurrent worker streams on this class of host (measured: a
-*trivial* pandas UDF over 24M rows runs 5.5s on local[8] but 60-220s on
-local[32] with 30-80% kernel time — a futex/selector convoy, not
-compute).  The scalable design: parse strictly-canonical lines entirely
-JVM-side with whole-stage-codegen'd expressions, and route ONLY
-non-canonical rows (reference-corpus oddities, malformed lines,
-non-ASCII frames — a few percent of real traffic) through the exact
-Arrow-batched Python parser.
+Why this exists: the JVM↔Python boundary is the expensive part of the
+exact parser — every row is serialized to Arrow, parsed by pandas and
+serialized back.  Parsing strictly-canonical lines entirely JVM-side
+keeps that cost to the non-canonical rows (reference-corpus oddities,
+malformed lines, non-ASCII frames — a few percent of real traffic).
+``parse_logs`` evaluates the mask and the native fields in the same
+narrow projection as the exact Arrow-batched UDF: canonical rows reach
+the UDF as NULLs, which cost next to nothing to ship.  The UDF still
+runs one Python worker stream per scan task; a trivial pandas UDF was
+once measured collapsing above ~20 concurrent streams (5.5 s on
+local[8] vs 60-220 s on local[32], a kernel futex convoy), which is not
+re-measured for this shape.
 
 Performance shape (this matters — naive Catalyst regex use re-executes
 the pattern once per extracted field):
@@ -21,10 +24,10 @@ the pattern once per extracted field):
   evaluates at most ONE format's pattern;
 * the groups are materialized ONCE per matching row: an anchored
   ``regexp_replace`` rewrites the line into its capture groups joined
-  by \\x01, in a dedicated Project *above* the mask filter
-  (CollapseProject keeps expensive multi-referenced expressions
-  materialized), and all fields are cheap ``try_element_at``/``length``
-  ops over the split array;
+  by \\x01 and split once, in a dedicated Project below the field
+  projection (CollapseProject keeps expensive multi-referenced
+  expressions materialized), and all fields are cheap
+  ``try_element_at``/``length`` ops over the split array;
 * every field expression is TOTAL (``try_element_at`` / ``try_cast`` /
   ``try_to_timestamp``): Catalyst is free to push user predicates over
   parsed columns below our projections and evaluate them on any row —
@@ -153,10 +156,8 @@ def native_5424_mask(text: Column) -> Column:
 
 
 def groups_str_3164(text: Column) -> Column:
-    """The SEP-joined group string BEFORE the split — the compact wire
-    form parse_logs ships through its single-scan exchange (one string
-    ≈ text bytes; the split array would serialize each group as a
-    separate UnsafeArrayData element, roughly doubling shuffle bytes)."""
+    """The SEP-joined capture groups of a matching line (the line itself
+    unchanged otherwise); ``split_groups`` turns it into the array."""
     return F.regexp_replace(text, NATIVE_3164_RE, _TPL3)
 
 

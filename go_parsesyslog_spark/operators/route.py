@@ -19,6 +19,7 @@ cells.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -126,9 +127,19 @@ def compute_hot_set(
         .agg(F.count(F.lit(1)).alias("_rows"))
         # one input scan feeds both the stats agg and the hot filter:
         # without this the two driver actions below each re-scan the
-        # full input to rebuild the (conv_id, _rows) aggregate
-        .localCheckpoint()
+        # full input to rebuild the (conv_id, _rows) aggregate.  A
+        # persist (not a localCheckpoint) keeps the lineage, so a lost
+        # executor's blocks are recomputed, and is released on return.
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    try:
+        return _hot_set(conv_counts, df.sparkSession, hot_threshold,
+                        spill_path, literal_cap)
+    finally:
+        conv_counts.unpersist()
+
+
+def _hot_set(conv_counts, spark, hot_threshold, spill_path, literal_cap):
     stats = conv_counts.agg(
         F.sum("_rows").alias("total"),
         F.count(F.lit(1)).alias("n"),
@@ -151,7 +162,7 @@ def compute_hot_set(
             "for the broadcast-join route"
         )
     hot.coalesce(1).write.mode("overwrite").parquet(spill_path)
-    n = df.sparkSession.read.parquet(spill_path).count()
+    n = spark.read.parquet(spill_path).count()
     return {"threshold": hot_threshold, "count": n, "ids": None,
             "path": spill_path,
             "max_conv_rows": max_rows, "total_rows": total_rows}

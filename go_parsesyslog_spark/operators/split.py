@@ -73,14 +73,6 @@ def _split_bounds(b: bytes, fmt: str) -> list[int]:
     return bounds
 
 
-def _split_blob(b: bytes, fmt: str) -> list[str]:
-    bounds = _split_bounds(b, fmt)
-    return [
-        b[s:e].decode("utf-8", errors="replace")
-        for s, e in zip(bounds[:-1], bounds[1:])
-    ]
-
-
 def split_messages(
     df: DataFrame, blob_col: str = "text", fmt: str = AUTO
 ) -> DataFrame:

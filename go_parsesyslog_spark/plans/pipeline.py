@@ -4,15 +4,17 @@ The Spark re-expression of the reference's whole purpose (SURVEY.md §2
 Table B): one declarative DAG per work unit —
 
     scan(unit files)                       # columnar, pruned
-      → parse_logs        (narrow, Arrow-batched, shuffle-free)
-      → enrich            (broadcast joins only — no exchange)
+      → parse_logs        (one narrow projection: native JVM parse,
+                           Arrow-batched exact UDF for the rest)
+      → enrich            (literal-map lookups — no join)
       → with_route_columns(salted bucket assignment, literal hot set)
       → ONE fan-out partitioned write      (the only full shuffle)
       → windowed metrics from the written unit (column-pruned readback)
 
 Work units are groups of input files: the unit is the resume/commit
-granule (plans/lineage.py).  Per unit the input is scanned exactly once
-and only TWO Spark jobs run — the fan-out write and the metrics
+granule (plans/lineage.py).  Per unit the input is scanned exactly once,
+scan through route is ONE narrow stage feeding the fan-out shuffle, and
+only TWO Spark jobs run — the fan-out write and the metrics
 aggregation over the freshly written (column-pruned) unit.  Units run
 concurrently on the scheduler (independent jobs), so per-job fixed
 latency overlaps instead of accumulating.

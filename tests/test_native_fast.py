@@ -151,18 +151,50 @@ def test_native_covers_most_canonical_traffic(spark):
     assert frac > 0.95, frac
 
 
-def test_native_parse_single_scan(spark):
-    """VERDICT r2 #4: the native engine must scan its input ONCE — the
-    fast and slow branches share one materialized exchange (runtime
-    ReusedExchange), not two independent source scans."""
+def test_native_parse_single_scan(spark, tmp_path):
+    """VERDICT r2 #4: the native engine must scan its input ONCE.  The
+    parse is one narrow stage: one scan, no exchange, one Arrow Python
+    node fed only the non-canonical rows, and each format's group regex
+    evaluated once (not re-inlined per output column)."""
+    import re
+
     df = generate_transcripts(2000, seed=9, corpus_frac=0.1)
-    sdf = spark.createDataFrame(df[["text"]], "text string")
-    parsed = parse_logs(sdf, fmt="auto", engine="native")
-    parsed.collect()  # materialize THIS plan so AQE finalizes it
+    path = str(tmp_path / "in")
+    spark.createDataFrame(df[["text"]], "text string").write.parquet(path)
+    parsed = parse_logs(spark.read.parquet(path), fmt="auto", engine="native")
+    parsed.collect()  # materialize THIS plan so AQE (if any) finalizes it
     plan = parsed._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
-    assert "isFinalPlan=true" in final, final
-    assert final.count("ReusedExchange") >= 1, final
-    # the 16x-per-output-column rlike discriminator must stay a single
-    # materialized projection, not get inlined per reference
+    if "AdaptiveSparkPlan" in final:
+        assert "isFinalPlan=true" in final, final
+    assert len(re.findall(r"\b\w*Scan\b", final)) == 1, final
+    assert final.count("Exchange") == 0, final
+    assert final.count("ArrowEvalPython") == 1, final
     assert final.count("RLIKE") <= 3, final.count("RLIKE")
+    assert final.count("regexp_replace") <= 2, final.count("regexp_replace")
+
+
+CANONICAL_3164 = "<34>Oct 11 22:14:15 mymachine su[230]: 'su root' failed\n"
+CANONICAL_5424 = (
+    "<165>1 2024-01-02T03:04:05Z host app proc mid [ex@1 k=\"v\"] hello\n"
+)
+
+
+@pytest.mark.parametrize("fmt", ["auto", "rfc3164", "rfc5424"])
+def test_native_degenerate_input_matches_exact(spark, fmt):
+    """NULL, empty and garbage text take the exact parser inside the
+    native engine's single projection and get its err_code; the
+    canonical lines beside them take the JVM path.  Row for row the
+    native engine equals the all-Python engine, for every format."""
+    from go_parsesyslog_spark.operators.native_fast import (
+        native_3164_mask,
+        native_5424_mask,
+    )
+
+    frame = f"{len(CANONICAL_5424)} {CANONICAL_5424}"
+    lines = [None, "", "garbage", CANONICAL_3164, frame]
+    _assert_equal(spark, lines, fmt)
+    canon = spark.createDataFrame([(CANONICAL_3164, frame)], "a string, b string")
+    row = canon.select(native_3164_mask(F.col("a")).alias("a"),
+                       native_5424_mask(F.col("b")).alias("b")).first()
+    assert row["a"] and row["b"]

@@ -367,3 +367,61 @@ def test_write_clustered_enables_file_skipping(spark, tmp_path):
     assert p_hit == len(p_spans), p_spans
     # and the data survives the layout change byte-for-byte
     assert spark.read.parquet(clustered).count() == 100_000
+
+
+def test_enrich_lookups_without_joins(spark):
+    """The role/tool lookups are literal-map lookups: the schema (names,
+    order, types) equals the broadcast left-join formulation, unknown or
+    NULL keys give NULL lookups, and the plan has no join at all."""
+    from go_parsesyslog_spark.operators.enrich import (
+        ROLE_FACILITY_MAP,
+        TOOL_APP_REGISTRY,
+    )
+
+    df = spark.createDataFrame(
+        [(0, "user", "bash", 3, 1), (1, "robot", "abacus", 6, 2),
+         (2, None, None, None, None), (3, "tool", "db", 0, 3)],
+        "i int, role string, tool string, severity int, facility int",
+    )
+    got = enrich(df, spark)
+
+    # the join formulation this operator replaces
+    roles = spark.createDataFrame(
+        ROLE_FACILITY_MAP, "role string, role_facility int, role_class string")
+    tools = spark.createDataFrame(
+        TOOL_APP_REGISTRY, "tool string, app_name string, app_tier string")
+    named = got.select(*df.columns, "facility_name", "severity_name",
+                       "severity_class")
+    joined = (named.join(F.broadcast(roles), "role", "left")
+              .join(F.broadcast(tools), "tool", "left"))
+    assert got.schema == joined.schema, (got.schema, joined.schema)
+    by_i = lambda r: r["i"]  # noqa: E731
+    assert sorted(got.collect(), key=by_i) == sorted(joined.collect(), key=by_i)
+
+    rows = {r["i"]: r for r in got.collect()}
+    assert (rows[0]["role_facility"], rows[0]["role_class"]) == (1, "interactive")
+    assert (rows[0]["app_name"], rows[0]["app_tier"]) == ("gnu-bash", "shell")
+    for i in (1, 2):  # unknown, then NULL keys
+        assert rows[i]["role_facility"] is None and rows[i]["role_class"] is None
+        assert rows[i]["app_name"] is None and rows[i]["app_tier"] is None
+
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+
+
+def test_hot_set_releases_its_cache(spark, input_dir, tmp_path_factory):
+    """The hot-set pre-aggregation caches its (conv_id, rows) aggregate
+    for its two driver actions and releases it before returning, on the
+    literal and on the spill route alike."""
+    from go_parsesyslog_spark.operators.route import compute_hot_set
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    df = spark.read.parquet(input_dir).select("conv_id")
+    small = compute_hot_set(df, hot_threshold=100)
+    assert small["count"] > 0 and small["path"] is None
+    assert jsc.getPersistentRDDs().size() == before
+    spill = str(tmp_path_factory.mktemp("hot_cache")) + "/hot"
+    big = compute_hot_set(df, hot_threshold=0, literal_cap=1, spill_path=spill)
+    assert big["path"] == spill and big["count"] > 1
+    assert jsc.getPersistentRDDs().size() == before
