@@ -37,7 +37,6 @@ def with_route_columns(
     n_buckets: int = 16,
     salt_buckets: int = 8,
     hot_threshold: int | None = None,
-    hot_source: DataFrame | None = None,
     hot_ids: list | None = None,
     hot_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -46,11 +45,6 @@ def with_route_columns(
     ``hot_threshold``: row count per conv_id above which a conversation
     is salted.  None → auto: 4× the mean rows/conv (computed with one
     partial agg over the input).
-
-    ``hot_source``: DataFrame to compute the hot-conversation counts on.
-    Pass the RAW input here — hot detection only needs ``conv_id``, and
-    counting on the parsed stream would re-run the (expensive) parse UDF
-    once per downstream action instead of a cheap column-pruned scan.
 
     ``hot_ids``: precomputed small hot set, folded in as an isin literal.
     ``hot_df``: precomputed hot set as a DataFrame with a ``conv_id``
@@ -76,8 +70,7 @@ def with_route_columns(
         if hot_df is not None:
             hot = hot_df.select("conv_id", F.lit(True).alias("_hot"))
         else:
-            counts_src = hot_source if hot_source is not None else df
-            conv_counts = counts_src.groupBy("conv_id").agg(
+            conv_counts = df.groupBy("conv_id").agg(
                 F.count(F.lit(1)).alias("_rows")
             )
             if hot_threshold is None:

@@ -8,8 +8,9 @@ directories plus an atomically-renamed JSON marker written strictly
 skipped; partial (marker-less) unit output is deleted and reprocessed —
 exactly once, idempotent.
 
-The marker doubles as the lineage/metrics record: input files, row
-counts, wall time.
+The marker doubles as the lineage record: input files, hot-set size,
+wall time.  Row counts are not kept here: the pipeline derives them,
+with the metrics, from one read-back of the committed units' sinks.
 """
 
 from __future__ import annotations
@@ -55,7 +56,6 @@ def record_unit(out_root: str, record: dict) -> None:
 
 def clean_partial_unit(out_root: str, unit_id: str) -> None:
     """Delete any partial output of an uncommitted unit before re-running."""
-    for sub in ("sinks", "metrics_partial"):
-        path = os.path.join(out_root, sub, f"unit={unit_id}")
-        if os.path.isdir(path):
-            shutil.rmtree(path)
+    path = os.path.join(out_root, "sinks", f"unit={unit_id}")
+    if os.path.isdir(path):
+        shutil.rmtree(path)

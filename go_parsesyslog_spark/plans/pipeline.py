@@ -9,15 +9,16 @@ Table B): one declarative DAG per work unit —
       → enrich            (literal-map lookups — no join)
       → with_route_columns(salted bucket assignment, literal hot set)
       → ONE fan-out partitioned write      (the only full shuffle)
-      → windowed metrics from the written unit (column-pruned readback)
+
+then, once per run, ONE windowed metrics aggregation over every
+committed unit's sink (column-pruned readback).
 
 Work units are groups of input files: the unit is the resume/commit
-granule (plans/lineage.py).  Per unit the input is scanned exactly once,
-scan through route is ONE narrow stage feeding the fan-out shuffle, and
-only TWO Spark jobs run — the fan-out write and the metrics
-aggregation over the freshly written (column-pruned) unit.  Units run
-concurrently on the scheduler (independent jobs), so per-job fixed
-latency overlaps instead of accumulating.
+granule (plans/lineage.py).  Per unit the input is scanned exactly once
+and scan through route is ONE narrow stage feeding the fan-out shuffle;
+the unit's only Spark work is its write.  Units run concurrently on the
+scheduler (independent jobs), so per-job fixed latency overlaps instead
+of accumulating.
 
 Scale design notes (100 TB / 1000 executors):
 * hot-conversation detection is ONE column-pruned pre-aggregation over
@@ -28,8 +29,11 @@ Scale design notes (100 TB / 1000 executors):
   at most the in-flight units; the marker rename is atomic;
 * the fan-out shuffle is keyed (severity_class, conv_bucket, salt) —
   hot conversations split across ``salt_buckets`` writer tasks;
-* metrics are partial-per-unit, merged driver-side (metric rows are
-  O(sinks × windows), thousands of times smaller than the data).
+* metrics and the summary's row counts come from one aggregation over
+  the committed sinks, run after the units (metric rows are
+  O(sinks × windows), thousands of times smaller than the data).  A
+  conversation's distinct-count estimate therefore covers every unit,
+  and a resumed run re-aggregates all committed units.
 """
 
 from __future__ import annotations
@@ -37,6 +41,7 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -89,7 +94,6 @@ def _process_unit(
     spark: SparkSession,
     files: list[str],
     unit_out: str,
-    metrics_out: str,
     fmt: str,
     ref_now,
     n_buckets: int,
@@ -97,7 +101,7 @@ def _process_unit(
     hot_set: dict,
     n_shuffle: int,
     salt_spread: int = 0,
-) -> tuple[int, int]:
+) -> None:
     df = spark.read.parquet(*files)
     parsed = parse_logs(df, text_col="text", fmt=fmt, ref_now=ref_now)
     enriched = enrich(parsed, spark)
@@ -132,7 +136,7 @@ def _process_unit(
     final = final.withColumn(
         "text", F.when(F.col("err_code").isNotNull(), F.col("text"))
     )
-    # Spark job 1: the only pass over the input.  Iceberg when the
+    # The only pass over the input.  Iceberg when the
     # runtime jar is present, partitioned parquet otherwise (probe +
     # logged fallback — sources/tableformat.py).
     #
@@ -155,15 +159,6 @@ def _process_unit(
         shuffled = final.repartition(n_shuffle, "sink_sev", "sink_key")
     write_partitioned(shuffled, unit_out, ["sink_sev", "sink_key"])
 
-    # Spark job 2: windowed metrics over the freshly written unit
-    # (column-pruned scan); the small result merges driver-side.
-    written = read_table(spark, unit_out)
-    mpdf = sink_metrics(written).toPandas()
-    _write_pandas_parquet(mpdf, metrics_out)
-    valid = int(mpdf.loc[mpdf.sink_sev != "dlq", "turn_count"].sum())
-    dlq = int(mpdf.loc[mpdf.sink_sev == "dlq", "turn_count"].sum())
-    return valid, dlq
-
 
 def run_pipeline(
     spark: SparkSession,
@@ -173,11 +168,9 @@ def run_pipeline(
     ref_now: pd.Timestamp | None = None,
     n_buckets: int = 16,
     salt_buckets: int = 8,
-    hot_threshold: int | None = None,
     n_units: int = 4,
     resume: bool = True,
     max_units: int | None = None,
-    unit_parallelism: int | None = None,
 ) -> dict:
     """Run (or resume) the full pipeline.  Returns a summary dict.
 
@@ -204,7 +197,6 @@ def run_pipeline(
         all_files = [f for _, fs in pending for f in fs]
         hot_set = compute_hot_set(
             spark.read.parquet(*all_files).select("conv_id"),
-            hot_threshold,
             spill_path=os.path.join(out_root, "_hot_set"),
         )
 
@@ -215,9 +207,8 @@ def run_pipeline(
     # Each unit's fan-out shuffle is sized to its core share so the
     # combined in-flight task count stays ≈ the core count.
     total_cores = spark.sparkContext.defaultParallelism
-    if unit_parallelism is None:
-        unit_parallelism = min(len(units), max(2, total_cores // 2))
-    n_shuffle = max(8, total_cores // max(1, unit_parallelism))
+    in_flight = max(1, min(len(units), max(2, total_cores // 2)))
+    n_shuffle = max(8, total_cores // in_flight)
 
     # Scale-adaptive salt spread for the fan-out write (guide §2.5/§6):
     # salting exists to split one oversized write cell across several
@@ -246,12 +237,9 @@ def run_pipeline(
         unit_id, files = unit
         lineage.clean_partial_unit(out_root, unit_id)
         unit_out = os.path.join(out_root, "sinks", f"unit={unit_id}")
-        metrics_out = os.path.join(
-            out_root, "metrics_partial", f"unit={unit_id}"
-        )
         tu = time.time()
-        valid, dlq = _process_unit(
-            spark, files, unit_out, metrics_out, fmt, ref_now,
+        _process_unit(
+            spark, files, unit_out, fmt, ref_now,
             n_buckets, salt_buckets, hot_set, n_shuffle, salt_spread,
         )
         lineage.record_unit(
@@ -259,8 +247,6 @@ def run_pipeline(
             {
                 "unit_id": unit_id,
                 "files": files,
-                "rows_valid": valid,
-                "rows_dlq": dlq,
                 "hot_convs": hot_set["count"],
                 "wall_s": round(time.time() - tu, 3),
             },
@@ -269,71 +255,62 @@ def run_pipeline(
 
     ran: list[str] = []
     if pending:
-        with ThreadPoolExecutor(max_workers=max(1, unit_parallelism)) as ex:
+        with ThreadPoolExecutor(max_workers=in_flight) as ex:
             ran = list(ex.map(run_one, pending))
 
-    # merge partial metrics → final metrics table (driver-side: partials
-    # are O(sinks × windows), tiny relative to the data)
-    all_done = lineage.completed_units(out_root)
-    if len(all_done) == len(units) and units:
-        import glob
-
-        import pyarrow.parquet as pq
-
-        parts = [
-            pq.read_table(p).to_pandas()
-            for p in glob.glob(
-                os.path.join(out_root, "metrics_partial", "*", "*.parquet")
-            )
-        ]
-        merged = (
-            pd.concat(parts)
-            .groupby(
-                ["sink_id", "sink_sev", "sink_key", "severity_class",
-                 "window_start", "window_end"],
-                dropna=False,
-                as_index=False,
-            )
-            .agg(
-                turn_count=("turn_count", "sum"),
-                approx_convs=("approx_convs", "max"),
-                total_msg_bytes=("total_msg_bytes", "sum"),
-            )
+    # ONE aggregation over every committed sink gives both the metrics
+    # table and the summary's row counts.  Only committed units are
+    # read: a killed attempt can leave an uncommitted sink directory.
+    # Sorted by cell so the metrics file is deterministic.
+    committed = lineage.completed_units(out_root)
+    rows_valid = rows_dlq = 0
+    if committed:
+        mpdf = sink_metrics(
+            _read_sinks(spark, out_root, committed)
+        ).toPandas().sort_values(
+            ["sink_id", "sink_sev", "sink_key", "severity_class",
+             "window_start"],
+            ignore_index=True,
         )
-        _write_pandas_parquet(merged, os.path.join(out_root, "metrics"))
+        is_dlq = mpdf["sink_sev"] == "dlq"
+        rows_valid = int(mpdf.loc[~is_dlq, "turn_count"].sum())
+        rows_dlq = int(mpdf.loc[is_dlq, "turn_count"].sum())
+        if len(committed) == len(units):
+            _write_pandas_parquet(mpdf, os.path.join(out_root, "metrics"))
 
-    recs = lineage.completed_units(out_root)
     return {
         "units_total": len(units),
         "units_run": sorted(ran),
         "units_skipped": sorted(skipped),
-        "complete": len(recs) == len(units),
-        "rows_valid": sum(r["rows_valid"] for r in recs.values()),
-        "rows_dlq": sum(r["rows_dlq"] for r in recs.values()),
+        "complete": len(committed) == len(units),
+        "rows_valid": rows_valid,
+        "rows_dlq": rows_dlq,
         "wall_s": round(time.time() - t0, 3),
     }
 
 
-def _read_sinks(spark: SparkSession, out_root: str) -> DataFrame:
+def _read_sinks(spark: SparkSession, out_root: str, unit_ids) -> DataFrame:
     sinks = os.path.join(out_root, "sinks")
+    paths = [os.path.join(sinks, f"unit={u}") for u in sorted(unit_ids)]
     if sink_format(spark) == "parquet":
-        return spark.read.parquet(sinks)
+        return spark.read.option("basePath", sinks).parquet(*paths)
     # Iceberg path-based tables are one table per unit — union them.
-    units = sorted(
-        os.path.join(sinks, d) for d in os.listdir(sinks)
-        if d.startswith("unit=")
+    return reduce(
+        DataFrame.unionByName, [read_table(spark, p) for p in paths]
     )
-    dfs = [read_table(spark, u) for u in units]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
 
 
 def read_routed(spark: SparkSession, out_root: str) -> DataFrame:
     """All committed routed (non-dlq) rows."""
-    return _read_sinks(spark, out_root).filter(F.col("sink_sev") != "dlq")
+    committed = lineage.completed_units(out_root)
+    return _read_sinks(spark, out_root, committed).filter(
+        F.col("sink_sev") != "dlq"
+    )
 
 
 def read_dlq(spark: SparkSession, out_root: str) -> DataFrame:
-    return _read_sinks(spark, out_root).filter(F.col("sink_sev") == "dlq")
+    """All committed dead-letter rows."""
+    committed = lineage.completed_units(out_root)
+    return _read_sinks(spark, out_root, committed).filter(
+        F.col("sink_sev") == "dlq"
+    )

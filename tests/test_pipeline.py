@@ -147,6 +147,61 @@ def test_merged_metrics_match_recount(spark, pipeline_out):
     assert per_sink_m == per_sink_r
 
 
+def test_approx_convs_over_all_units(spark, input_dir, pipeline_out):
+    """Every metrics cell's approx_convs is ONE distinct estimate over
+    all units.  HLL registers merge order-independently, so it equals
+    the estimate of a single aggregation over the whole input exactly —
+    a merge of per-unit estimates undercounts every multi-unit cell."""
+    out, _ = pipeline_out
+    keys = ["sink_id", "sink_sev", "sink_key", "severity_class",
+            "window_start"]
+    got = spark.read.parquet(os.path.join(out, "metrics")).select(
+        *keys[:-1],
+        F.col("window_start").cast("timestamp").alias("window_start"),
+        "approx_convs",
+    )
+    exp = (
+        _oracle(spark, input_dir)
+        .groupBy(*keys[:-1],
+                 F.window("ts", "1 hour").start.alias("window_start"))
+        .agg(F.approx_count_distinct("conv_id").alias("want"))
+    )
+    on = [got[k].eqNullSafe(exp[k]) for k in keys]
+    cells = got.join(exp, on, "full_outer").select(
+        "approx_convs", "want").collect()
+    assert len(cells) == exp.count() > 1
+    bad = [c for c in cells if c["approx_convs"] != c["want"]]
+    assert not bad, f"{len(bad)} of {len(cells)} cells differ: {bad[:3]}"
+
+
+def test_summary_ignores_uncommitted_unit_output(spark, input_dir,
+                                                 tmp_path_factory):
+    """A killed attempt can leave an uncommitted sink directory behind.
+    The summary's row counts come from the committed units' sinks only,
+    also on a call that runs no unit."""
+    import shutil
+
+    out = str(tmp_path_factory.mktemp("uncommitted_out"))
+    s1 = run_pipeline(spark, input_dir, out, n_units=4, n_buckets=8,
+                      resume=True, max_units=2)
+    assert s1["units_run"] == ["0000", "0001"] and not s1["complete"]
+    sinks = os.path.join(out, "sinks")
+    shutil.copytree(os.path.join(sinks, "unit=0000"),
+                    os.path.join(sinks, "unit=0003"))
+    s2 = run_pipeline(spark, input_dir, out, n_units=4, n_buckets=8,
+                      resume=True, max_units=0)
+    assert s2["units_run"] == [] and not s2["complete"]
+    assert (s2["rows_valid"], s2["rows_dlq"]) == (
+        s1["rows_valid"], s1["rows_dlq"])
+    valid = dlq = 0
+    for u in s1["units_run"]:
+        unit = spark.read.parquet(os.path.join(sinks, f"unit={u}"))
+        valid += unit.filter(F.col("sink_sev") != "dlq").count()
+        dlq += unit.filter(F.col("sink_sev") == "dlq").count()
+    assert (s2["rows_valid"], s2["rows_dlq"]) == (valid, dlq)
+    assert 0 < valid + dlq < N_ROWS
+
+
 def test_resume_skips_committed_units(spark, input_dir, tmp_path_factory):
     """Kill/resume: a run stopped after 2 of 4 units resumes without
     reprocessing them, and the final output matches a one-shot run."""
