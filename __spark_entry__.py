@@ -52,6 +52,14 @@ _T_REPART_KEY = {
     "part": "p_partkey",
 }
 
+# Size floor of the repartition in _t: 0.4 MB, NOT a "comfortable" few
+# MB — the floor must be the exchange's break-even, not a scale knob.  At
+# sf0.1 the 2 MB events file left the whole wire-text+regex parse
+# single-task (1.3 s for 100k rows; parallelized ≈0.4 s) while the
+# exchange itself costs ~0.1-0.3 s.  Tables under 0.4 MB are genuine
+# dims (customer/part/supplier at gate scales) that broadcast anyway.
+_T_MIN_BYTES = 400_000
+
 _T_SPLITS_CACHE: dict[str, tuple[int, int]] = {}
 
 
@@ -74,7 +82,7 @@ def _t(
     sf_dir: str,
     name: str,
     parallel: bool = True,
-    min_bytes: int | None = None,
+    min_bytes: int = _T_MIN_BYTES,
 ) -> DataFrame:
     """Read a testdata table, fixing INPUT-SKEW parallelism: the bench
     tables are single parquet files with ONE row group, so however large
@@ -113,17 +121,7 @@ def _t(
     # parallelize the scan.  Multi-row-group files (lineitem, orders)
     # already split; re-shuffling those 100+ MB facts here would cost
     # more than the downstream gains (joins/aggs re-key them anyway).
-    # Floor 0.4 MB, NOT a "comfortable" few MB: the floor must be the
-    # exchange's break-even, not a scale knob — at sf0.1 the 2 MB
-    # events file left the whole wire-text+regex parse single-task
-    # (1.3 s for 100k rows; parallelized ≈0.4 s) while the exchange
-    # itself costs ~0.1-0.3 s.  Tables under 0.4 MB are genuine dims
-    # (customer/part/supplier at gate scales) that broadcast anyway.
-    # Env-overridable for tuning/odd storage (bytes).
-    floor = min_bytes if min_bytes is not None else int(
-        os.environ.get("SPARK_GRAFT_T_MIN_BYTES", 400_000)
-    )
-    if row_groups == 1 and par > 1 and size >= floor:
+    if row_groups == 1 and par > 1 and size >= min_bytes:
         df = df.repartition(par, F.col(key))
     return df
 

@@ -31,6 +31,10 @@ from pyspark.sql import types as T
 # fixed, documented hash parameters — deterministic across runs/executors
 _MERSENNE = (1 << 61) - 1
 
+# Doc count above which minhash_lsh_jaccard_pairs skips its text-bytes
+# probe (the gram table cannot fit a broadcast there).
+VERIFY_BROADCAST_DOCS = 2_000_000
+
 
 def _hash_shingles(
     texts: pd.Series, k: int, sentinel: bool = True
@@ -528,9 +532,7 @@ def minhash_lsh_jaccard_pairs(
         os.environ.get("SPARK_GRAFT_VERIFY_BROADCAST_BYTES", 256_000_000)
     )
     gram_bytes_bound = None
-    if n_docs <= int(
-        os.environ.get("SPARK_GRAFT_VERIFY_BROADCAST_DOCS", 2_000_000)
-    ):
+    if n_docs <= VERIFY_BROADCAST_DOCS:
         tb = df.agg(F.sum(F.octet_length(text_col))).collect()[0][0]
         # shingle bytes ≤ 8 × text bytes (≤ one 8-byte hash per char)
         gram_bytes_bound = 8 * int(tb or 0)

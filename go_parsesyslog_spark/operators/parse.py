@@ -18,8 +18,6 @@ for every row.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -146,22 +144,19 @@ def parse_logs(
     text_col: str = "text",
     fmt: str = AUTO,
     ref_now: pd.Timestamp | None = None,
-    engine: str | None = None,
+    engine: str = "native",
 ) -> DataFrame:
     """Attach the parsed LogMsg columns to ``df``.
 
     Equivalent of ParseString/ParseReader over every row (rfc3164.go:65-104,
     rfc5424.go:57-111).
 
-    ``engine="native"`` (default, overridable via
-    ``$SPARK_GRAFT_PARSE_ENGINE``): strictly-canonical rows are parsed
+    ``engine="native"`` (default): strictly-canonical rows are parsed
     entirely JVM-side (whole-stage codegen — see operators/native_fast
     for why this matters at high core counts); everything else takes the
     Arrow-batched exact Python parser, in the same narrow projection.
     ``engine="arrow"`` forces the Python engine for all rows.
     """
-    if engine is None:
-        engine = os.environ.get("SPARK_GRAFT_PARSE_ENGINE", "native")
     if engine != "native":
         return parse_logs_arrow(df, text_col, fmt, ref_now)
 

@@ -40,7 +40,11 @@ def with_route_columns(
     hot_ids: list | None = None,
     hot_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Add sink_id / conv_bucket / salt columns.
+    """Add conv_bucket / sink_id / salt / sink_sev / sink_key columns.
+
+    ``sink_sev``/``sink_key`` partition the fan-out sink: a row with a
+    non-null ``err_code`` goes to ``('dlq', err_code)``, every other row
+    to ``(severity_class, conv_bucket)``.
 
     ``hot_threshold``: row count per conv_id above which a conversation
     is salted.  None → auto: 4× the mean rows/conv (computed with one
@@ -63,9 +67,7 @@ def with_route_columns(
     )
 
     if hot_ids is not None and hot_df is None:
-        if len(hot_ids) == 0:
-            return out.withColumn("salt", F.lit(0).cast("int"))
-        is_hot = F.col("conv_id").isin(list(hot_ids))
+        is_hot = F.col("conv_id").isin(list(hot_ids)) if hot_ids else None
     else:
         if hot_df is not None:
             hot = hot_df.select("conv_id", F.lit(True).alias("_hot"))
@@ -83,18 +85,26 @@ def with_route_columns(
             )
         out = out.join(F.broadcast(hot), "conv_id", "left")
         is_hot = F.col("_hot").isNotNull()
-    out = out.withColumn(
-        "salt",
-        F.when(
+    salt = F.lit(0)
+    if is_hot is not None:
+        salt = F.when(
             is_hot,
             F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets)),
-        )
-        .otherwise(F.lit(0))
-        .cast("int"),
-    )
+        ).otherwise(salt)
+    out = out.withColumn("salt", salt.cast("int"))
     if "_hot" in out.columns:
         out = out.drop("_hot")
-    return out
+    is_dlq = F.col("err_code").isNotNull()
+    return out.withColumns(
+        {
+            "sink_sev": F.when(is_dlq, F.lit(DLQ)).otherwise(
+                F.col("severity_class")
+            ),
+            "sink_key": F.when(is_dlq, F.col("err_code")).otherwise(
+                F.col("conv_bucket").cast("string")
+            ),
+        }
+    )
 
 
 def compute_hot_set(

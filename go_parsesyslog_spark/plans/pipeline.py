@@ -119,21 +119,10 @@ def _process_unit(
         hot_ids=hot_set.get("ids"),
         hot_df=hot_df,
     )
-    # dlq rows: sink_sev='dlq', sink_key=err_code; valid rows: class/bucket
-    final = routed.withColumns(
-        {
-            "sink_sev": F.when(
-                F.col("err_code").isNotNull(), F.lit("dlq")
-            ).otherwise(F.col("severity_class")),
-            "sink_key": F.when(
-                F.col("err_code").isNotNull(), F.col("err_code")
-            ).otherwise(F.col("conv_bucket").cast("string")),
-        }
-    )
     # Keep the raw wire text only for DLQ rows (replay/debug); nulling it
     # for parsed rows halves the sink write volume — the parsed columns
     # carry everything (per-turn text equality is on `message`).
-    final = final.withColumn(
+    final = routed.withColumn(
         "text", F.when(F.col("err_code").isNotNull(), F.col("text"))
     )
     # The only pass over the input.  Iceberg when the

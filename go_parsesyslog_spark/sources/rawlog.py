@@ -32,7 +32,7 @@ def read_syslog(
     path: str,
     fmt: str = "auto",
     framing: str = "lines",
-    engine: str | None = None,
+    engine: str = "native",
     with_source_file: bool = True,
     ref_now=None,
 ) -> DataFrame:

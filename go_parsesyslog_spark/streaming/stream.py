@@ -70,17 +70,7 @@ def parsed_stream(
 ) -> DataFrame:
     parsed = parse_logs(stream, fmt=fmt, ref_now=ref_now)
     e = enrich(parsed, spark)
-    routed = with_route_columns(e, n_buckets=n_buckets, hot_ids=[])
-    return routed.withColumns(
-        {
-            "sink_sev": F.when(
-                F.col("err_code").isNotNull(), F.lit("dlq")
-            ).otherwise(F.col("severity_class")),
-            "sink_key": F.when(
-                F.col("err_code").isNotNull(), F.col("err_code")
-            ).otherwise(F.col("conv_bucket").cast("string")),
-        }
-    )
+    return with_route_columns(e, n_buckets=n_buckets, hot_ids=[])
 
 
 def stream_routed_sink(
@@ -162,6 +152,10 @@ def _read_static_stream(
 
 _file_sink_dirs: list[str] = []
 
+# Input bytes at which _gate_sink_for switches to the parquet sink
+# (the measured break-even).
+FILE_SINK_BYTES = 8_000_000
+
 
 def _cleanup_file_sink_dirs() -> None:
     import shutil
@@ -187,12 +181,9 @@ def _gate_sink_for(events_path: str) -> str:
     input outgrows the measured break-even; small-cardinality outputs
     (windows, sessions, join matches) stay on the memory sink at the
     call site."""
-    import os
-
-    threshold = int(
-        os.environ.get("SPARK_GRAFT_STREAM_FILE_SINK_BYTES", 8_000_000)
-    )
-    return "files" if _input_bytes(events_path) >= threshold else "memory"
+    if _input_bytes(events_path) >= FILE_SINK_BYTES:
+        return "files"
+    return "memory"
 
 
 def _gate_partitions(
@@ -270,17 +261,17 @@ def _materialize_availablenow(
             # memory sink ingests every output row into the driver JVM
             # single-threaded (fine for window/session/key-cardinality
             # results, a bottleneck for row-per-input projections like
-            # the streaming grok at 10^6 wide rows).  Files land on the
-            # same tmpfs as the checkpoint, are written by the
-            # microbatch's tasks in parallel, and the returned reader
-            # scans them in parallel.  The dir must outlive the
+            # the streaming grok at 10^6 wide rows).  Files are written
+            # by the microbatch's tasks in parallel, and the returned
+            # reader scans them in parallel.  The dir must outlive the
             # returned (lazy) DataFrame, so it is reaped at interpreter
-            # exit instead of in the ``finally``.
+            # exit instead of in the ``finally`` — which is why it goes
+            # to the default (disk-backed) temp dir, not the tmpfs of
+            # the checkpoint: outputs of many large gate queries would
+            # otherwise pile up in RAM until exit.
             import atexit
 
-            out_dir = tempfile.mkdtemp(
-                prefix=f"gps_stream_out_{name}_", dir=ckpt_base
-            )
+            out_dir = tempfile.mkdtemp(prefix=f"gps_stream_out_{name}_")
             if not _file_sink_dirs:
                 atexit.register(_cleanup_file_sink_dirs)
             _file_sink_dirs.append(out_dir)

@@ -1,5 +1,6 @@
-"""Layout guard: every module of the package is reachable by imports
-from an entry point.
+"""Layout guards: every module of the package is reachable by imports
+from an entry point, and the package reads no environment knob beyond
+the allowed few.
 
 The walk follows ``import``/``from … import`` statements anywhere in a
 file (function-level imports included) starting from the declared
@@ -8,6 +9,7 @@ reaches is dead code: delete it rather than let it grow back."""
 
 import ast
 import os
+import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "go_parsesyslog_spark"
@@ -75,3 +77,17 @@ def test_every_package_module_is_reachable():
     unreached = sorted(set(_package_modules()) - reachable_modules())
     assert not unreached, f"modules no entry point imports: {unreached}"
 
+
+
+# Environment variables the package may read.  Spark settings come from
+# Spark's own configuration (spark-submit flags, get_spark arguments),
+# not from a parallel environment layer.
+ALLOWED_KNOBS = {"CPUS", "SALT_TARGET_ROWS", "VERIFY_BROADCAST_BYTES"}
+
+
+def test_no_new_environment_knobs():
+    found = set()
+    for path in _py_files(PKG) + _py_files("__spark_entry__.py"):
+        with open(path, encoding="utf-8") as f:
+            found.update(re.findall(r"SPARK_GRAFT_([A-Z0-9_]+)", f.read()))
+    assert found <= ALLOWED_KNOBS, sorted(found - ALLOWED_KNOBS)

@@ -419,3 +419,29 @@ def test_availablenow_grok_extract_matches_batch(spark, sf_dir):
     b = sorted((r["event_id"], r["k"], r["t"], r["_grok_matched"])
                for r in batch.collect())
     assert s == b and len(s) > 0
+
+
+def test_gate_file_sink_matches_memory_sink(spark, sf_dir):
+    """The parquet gate sink returns the same rows as the memory sink,
+    and its output (which lives until interpreter exit) is not kept on
+    the RAM-backed tmpfs the throwaway checkpoint uses."""
+    from go_parsesyslog_spark.streaming.stream import (
+        _materialize_availablenow,
+        _read_static_stream,
+    )
+
+    path = f"{sf_dir}/events.parquet"
+    by_sink = {
+        sink: _materialize_availablenow(
+            spark, _read_static_stream(spark, path), f"gate_{sink}",
+            sink=sink,
+        )
+        for sink in ("memory", "files")
+    }
+    memory, files = (
+        sorted(map(tuple, by_sink[s].collect())) for s in ("memory", "files")
+    )
+    assert files == memory and len(memory) > 0
+    out_files = by_sink["files"].inputFiles()
+    assert out_files
+    assert not [f for f in out_files if "/dev/shm/" in f]

@@ -3,14 +3,15 @@
 The north-rule deployment shape: the package ships as a zip via
 ``--py-files`` and the driver script stays thin —
 
-    cd /root/repo && zip -qr /tmp/gps.zip go_parsesyslog_spark
-    spark-submit --master <cluster> --py-files /tmp/gps.zip \
+    zip -qr gps.zip go_parsesyslog_spark   # from the repo root
+    spark-submit --master <cluster> --py-files gps.zip \
         tools/submit_pipeline.py --input <transcripts> --out <sinks> \
         [--n-units 64] [--fmt auto] [--no-resume]
 
-On a cluster the session master/executor conf comes from spark-submit;
-this script only sets the session-level knobs (AQE, Arrow, UTC) that
-`get_spark` always applies.  Prints one JSON summary line (units run /
+Every setting spark-submit passes (``--master``, ``--driver-memory``,
+``--executor-*``, ``--conf k=v``) wins: `get_spark` fills in its package
+defaults (AQE, Arrow, UTC, 16m scan splits, ...) only for keys the
+launcher left unset.  Prints one JSON summary line (units run /
 skipped, row counts, wall seconds) so orchestrators can parse the
 result.  Re-running after a kill resumes from the per-unit lineage
 markers unless --no-resume.
