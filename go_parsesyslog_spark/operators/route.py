@@ -1,20 +1,19 @@
-"""Routing operator: fan-out sink assignment with salted skew defusal.
+"""Routing operator: fan-out sink assignment and the hot-conversation salt.
 
 Route key (FIXTURES.md §5): ``(severity_class, conv_bucket)`` where
 ``conv_bucket = pmod(xxhash64(conv_id), n_buckets)``; rows with a
 non-null ``err_code`` go to the dead-letter sink instead.
 
-Skew: hot conversations (detected by a cheap pre-aggregation) receive a
-per-row salt so the shuffle before the fan-out write splits a hot
-(severity_class, conv_bucket) cell across ``salt_buckets`` tasks instead
-of one straggler.  AQE's skew handling only covers joins/sorts — a
-custom fan-out write needs explicit salting (SURVEY.md §4.3).
+Skew: hot conversations (detected by a cheap pre-aggregation,
+``compute_hot_set``) receive a per-row ``salt`` column.  The salt is not
+part of the write's shuffle key: the pipeline writes through a
+``rebalance``, and AQE (``optimizeSkewsInRebalancePartitions``, Spark
+3.3+) splits any oversized reduce partition of it from the measured
+map-output sizes.
 
 At 100 TB: the pre-agg is a partial-aggregated count per conv_id (small
 result ≪ input), the hot set is broadcast back, and the only full
-shuffle is the one repartition before the write — sized by
-``spark.sql.shuffle.partitions`` and split further by the salt on hot
-cells.
+shuffle is the rebalance before the write.
 """
 
 from __future__ import annotations
@@ -36,7 +35,6 @@ def with_route_columns(
     df: DataFrame,
     n_buckets: int = 16,
     salt_buckets: int = 8,
-    hot_threshold: int | None = None,
     hot_ids: list | None = None,
     hot_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -46,15 +44,17 @@ def with_route_columns(
     non-null ``err_code`` goes to ``('dlq', err_code)``, every other row
     to ``(severity_class, conv_bucket)``.
 
-    ``hot_threshold``: row count per conv_id above which a conversation
-    is salted.  None → auto: 4× the mean rows/conv (computed with one
-    partial agg over the input).
+    ``salt`` is ``pmod(xxhash64(conv_id, turn_idx), salt_buckets)`` for
+    the rows of a hot conversation and 0 for every other row.  The hot
+    set comes from ``compute_hot_set``, as one of:
 
-    ``hot_ids``: precomputed small hot set, folded in as an isin literal.
-    ``hot_df``: precomputed hot set as a DataFrame with a ``conv_id``
-    column — broadcast-hash-joined; use for hot sets above
-    ``HOT_LITERAL_CAP`` (an isin literal that size bloats plan/codegen,
-    and collecting it risks driver memory at true scale).
+    ``hot_ids``: a small hot set, folded in as an isin literal.
+    ``hot_df``: a DataFrame with a ``conv_id`` column — broadcast-hash-
+    joined; use for hot sets above ``HOT_LITERAL_CAP`` (an isin literal
+    that size bloats plan/codegen, and collecting it risks driver
+    memory at true scale).
+
+    With neither, no conversation is salted.
     """
     out = df.withColumn(
         "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
@@ -66,25 +66,13 @@ def with_route_columns(
         ),
     )
 
-    if hot_ids is not None and hot_df is None:
-        is_hot = F.col("conv_id").isin(list(hot_ids)) if hot_ids else None
-    else:
-        if hot_df is not None:
-            hot = hot_df.select("conv_id", F.lit(True).alias("_hot"))
-        else:
-            conv_counts = df.groupBy("conv_id").agg(
-                F.count(F.lit(1)).alias("_rows")
-            )
-            if hot_threshold is None:
-                stats = conv_counts.agg(
-                    F.avg("_rows").alias("mean"), F.count(F.lit(1)).alias("n")
-                ).collect()[0]
-                hot_threshold = max(64, int(4 * (stats["mean"] or 1)))
-            hot = conv_counts.filter(F.col("_rows") > hot_threshold).select(
-                "conv_id", F.lit(True).alias("_hot")
-            )
+    is_hot = None
+    if hot_df is not None:
+        hot = hot_df.select("conv_id", F.lit(True).alias("_hot"))
         out = out.join(F.broadcast(hot), "conv_id", "left")
         is_hot = F.col("_hot").isNotNull()
+    elif hot_ids:
+        is_hot = F.col("conv_id").isin(list(hot_ids))
     salt = F.lit(0)
     if is_hot is not None:
         salt = F.when(
@@ -116,15 +104,15 @@ def compute_hot_set(
     """ONE column-pruned pre-aggregation over the raw input detecting the
     hot conversations (rows > threshold).
 
-    Returns ``{"threshold", "count", "ids", "path", "max_conv_rows",
-    "total_rows"}``: hot sets up to ``literal_cap`` come back as a plain
-    ``ids`` list (fold into the route expression as an isin literal —
-    cheapest, no join); larger sets are written to ``spill_path``
-    parquet and come back as ``path`` for the broadcast-join route —
-    nothing is ever silently truncated, and driver memory stays bounded
-    at 10^12-turn scale.  ``max_conv_rows``/``total_rows`` let the
-    writer size its salt spread to the data instead of a constant
-    (guide §2: scale-adaptive partitioning)."""
+    ``hot_threshold`` defaults to 4× the mean rows per conversation
+    (at least 64).  Returns ``{"threshold", "count", "ids", "path"}``:
+    hot sets up to ``literal_cap`` come back as a plain ``ids`` list
+    (fold into the route expression as an isin literal — cheapest, no
+    join); larger sets are written to ``spill_path`` parquet and come
+    back as ``path`` for the broadcast-join route — nothing is ever
+    silently truncated, and driver memory stays bounded at 10^12-turn
+    scale.  The result only decides which rows of ``with_route_columns``
+    get a ``salt``."""
     conv_counts = (
         df.groupBy("conv_id")
         .agg(F.count(F.lit(1)).alias("_rows"))
@@ -143,22 +131,17 @@ def compute_hot_set(
 
 
 def _hot_set(conv_counts, spark, hot_threshold, spill_path, literal_cap):
-    stats = conv_counts.agg(
-        F.sum("_rows").alias("total"),
-        F.count(F.lit(1)).alias("n"),
-        F.max("_rows").alias("mx"),
-    ).collect()[0]
-    total_rows = int(stats["total"] or 0)
     if hot_threshold is None:
-        mean = total_rows / stats["n"] if stats["n"] else 1
+        stats = conv_counts.agg(
+            F.sum("_rows").alias("total"), F.count(F.lit(1)).alias("n")
+        ).collect()[0]
+        mean = int(stats["total"] or 0) / stats["n"] if stats["n"] else 1
         hot_threshold = max(64, int(4 * mean))
-    max_rows = int(stats["mx"] or 0)
     hot = conv_counts.filter(F.col("_rows") > hot_threshold).select("conv_id")
     head = [r["conv_id"] for r in hot.limit(literal_cap + 1).collect()]
     if len(head) <= literal_cap:
         return {"threshold": hot_threshold, "count": len(head),
-                "ids": head, "path": None,
-                "max_conv_rows": max_rows, "total_rows": total_rows}
+                "ids": head, "path": None}
     if spill_path is None:
         raise ValueError(
             f"hot set exceeds literal cap ({literal_cap}); pass spill_path "
@@ -167,5 +150,4 @@ def _hot_set(conv_counts, spark, hot_threshold, spill_path, literal_cap):
     hot.coalesce(1).write.mode("overwrite").parquet(spill_path)
     n = spark.read.parquet(spill_path).count()
     return {"threshold": hot_threshold, "count": n, "ids": None,
-            "path": spill_path,
-            "max_conv_rows": max_rows, "total_rows": total_rows}
+            "path": spill_path}

@@ -22,13 +22,17 @@ of accumulating.
 
 Scale design notes (100 TB / 1000 executors):
 * hot-conversation detection is ONE column-pruned pre-aggregation over
-  the raw input; small hot sets fold into the route expression as a
-  literal (no join), large ones spill to parquet and broadcast-hash-join
-  (bounded plan size + driver memory, nothing truncated);
+  the raw input that fills the ``salt`` column; small hot sets fold
+  into the route expression as a literal (no join), large ones spill
+  to parquet and broadcast-hash-join (bounded plan size + driver
+  memory, nothing truncated);
 * unit size bounds the blast radius of a failure — a killed run loses
   at most the in-flight units; the marker rename is atomic;
-* the fan-out shuffle is keyed (severity_class, conv_bucket, salt) —
-  hot conversations split across ``salt_buckets`` writer tasks;
+* the fan-out shuffle is a rebalance keyed (sink_sev, sink_key): AQE
+  splits a reduce partition larger than
+  ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` from the measured
+  map output, so a hot cell spreads over several writer tasks with no
+  size estimate up front;
 * metrics and the summary's row counts come from one aggregation over
   the committed sinks, run after the units (metric rows are
   O(sinks × windows), thousands of times smaller than the data).  A
@@ -100,7 +104,6 @@ def _process_unit(
     salt_buckets: int,
     hot_set: dict,
     n_shuffle: int,
-    salt_spread: int = 0,
 ) -> None:
     df = spark.read.parquet(*files)
     parsed = parse_logs(df, text_col="text", fmt=fmt, ref_now=ref_now)
@@ -130,22 +133,15 @@ def _process_unit(
     # logged fallback — sources/tableformat.py).
     #
     # The shuffle key decides how many writer tasks (= output files) a
-    # (sink_sev, sink_key) cell spans.  The salt COLUMN always carries
-    # the full per-row value; how much of it participates in the
-    # shuffle is sized to the data (``salt_spread``, derived in
-    # run_pipeline): a cell only needs several writers when it can
-    # exceed one writer's comfortable file size, otherwise spreading it
-    # just fragments the sink into per-salt shards (measured at sf0.1:
-    # 2,503 files → 540 for identical 52 MB of output, and the write
-    # phase halved).  At full spread the key is byte-identical to the
-    # previous (sev, key, salt) behavior.
-    if salt_spread > 1:
-        spread_key = F.pmod(F.col("salt"), F.lit(salt_spread))
-        shuffled = final.repartition(
-            n_shuffle, F.col("sink_sev"), F.col("sink_key"), spread_key
-        )
-    else:
-        shuffled = final.repartition(n_shuffle, "sink_sev", "sink_key")
+    # (sink_sev, sink_key) cell spans: one, unless AQE sees a reduce
+    # partition above spark.sql.adaptive.advisoryPartitionSizeInBytes
+    # in the measured map output and splits it
+    # (optimizeSkewsInRebalancePartitions), which is how a hot
+    # conversation's cell gets several writers.  The split works on
+    # whole reduce partitions, so the cold cells hashed into the same
+    # partition are split with it; a smaller advisory size trades more
+    # files for less skew.
+    shuffled = final.hint("rebalance", n_shuffle, "sink_sev", "sink_key")
     write_partitioned(shuffled, unit_out, ["sink_sev", "sink_key"])
 
 
@@ -199,29 +195,6 @@ def run_pipeline(
     in_flight = max(1, min(len(units), max(2, total_cores // 2)))
     n_shuffle = max(8, total_cores // in_flight)
 
-    # Scale-adaptive salt spread for the fan-out write (guide §2.5/§6):
-    # salting exists to split one oversized write cell across several
-    # writer tasks.  A cell needs ceil(rows / target-rows-per-writer)
-    # writers; below that, per-salt spreading only multiplies the file
-    # count (x4.6 measured at sf0.1) and the commit/footer overhead
-    # with zero skew benefit.  Sized from BOTH the largest single
-    # conversation (the skew unit the salt was built for) and the mean
-    # rows per (cell, unit) (so uniformly huge inputs still fan out),
-    # it reaches the full ``salt_buckets`` spread automatically at
-    # cluster scale — at 10^9-row hot conversations this reproduces the
-    # round-5 behavior bit-for-bit (pmod(salt, spread) == salt at full
-    # spread).  The salt COLUMN itself is untouched either way.
-    target = int(os.environ.get("SPARK_GRAFT_SALT_TARGET_ROWS", 1_000_000))
-    max_conv = int(hot_set.get("max_conv_rows") or 0)
-    total_rows_est = int(hot_set.get("total_rows") or 0)
-    n_cells = max(1, n_buckets)  # sev classes x conv buckets >= n_buckets
-    mean_cell = total_rows_est / max(1, len(pending) or 1) / n_cells
-    need = max(
-        -(-max_conv // target),          # ceil
-        -(-int(mean_cell) // target),
-    )
-    salt_spread = int(min(salt_buckets, max(1, need)))
-
     def run_one(unit):
         unit_id, files = unit
         lineage.clean_partial_unit(out_root, unit_id)
@@ -229,7 +202,7 @@ def run_pipeline(
         tu = time.time()
         _process_unit(
             spark, files, unit_out, fmt, ref_now,
-            n_buckets, salt_buckets, hot_set, n_shuffle, salt_spread,
+            n_buckets, salt_buckets, hot_set, n_shuffle,
         )
         lineage.record_unit(
             out_root,

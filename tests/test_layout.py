@@ -82,7 +82,7 @@ def test_every_package_module_is_reachable():
 # Environment variables the package may read.  Spark settings come from
 # Spark's own configuration (spark-submit flags, get_spark arguments),
 # not from a parallel environment layer.
-ALLOWED_KNOBS = {"CPUS", "SALT_TARGET_ROWS", "VERIFY_BROADCAST_BYTES"}
+ALLOWED_KNOBS = {"CPUS", "VERIFY_BROADCAST_BYTES"}
 
 
 def test_no_new_environment_knobs():

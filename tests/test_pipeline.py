@@ -262,10 +262,13 @@ def test_hot_set_spills_and_broadcast_joins(spark, tmp_path_factory):
 
 
 def test_salting_splits_hot_conversations(spark, input_dir):
+    from go_parsesyslog_spark.operators.route import compute_hot_set
+
     df = spark.read.parquet(input_dir)
+    hot_set = compute_hot_set(df.select("conv_id"), hot_threshold=100)
     parsed = parse_logs(df, fmt="auto", ref_now=REF_NOW)
     r = with_route_columns(enrich(parsed, spark), n_buckets=8,
-                           salt_buckets=8, hot_threshold=100)
+                           salt_buckets=8, hot_ids=hot_set["ids"])
     hot = r.groupBy("conv_id").count().filter(F.col("count") > 100)
     assert hot.count() > 0, "datagen should produce hot conversations"
     salts = (
@@ -280,36 +283,31 @@ def test_salting_splits_hot_conversations(spark, input_dir):
     assert [row["salt"] for row in cold_salts] == [0]
 
 
-def test_salt_spread_scales_with_data(spark, input_dir, tmp_path_factory):
-    """The fan-out write's salt spread must size itself to the data:
-    below the per-writer row target a (sink_sev, sink_key) cell writes
-    ONE file per unit (no per-salt fragmentation); forcing a tiny
-    target reproduces the full salted spread — with an identical row
-    multiset either way (the salt COLUMN itself never changes)."""
+def test_fanout_write_splits_oversized_cells(spark, input_dir,
+                                             tmp_path_factory):
+    """The fan-out write gives a (sink_sev, sink_key) cell one file per
+    unit, and AQE splits a cell whose reduce partition exceeds the
+    advisory size over several writers — with an identical row multiset
+    either way.  One unit, so its write has several map tasks: AQE
+    splits a reduce partition by map-output blocks."""
     import glob
 
-    from go_parsesyslog_spark.operators.route import compute_hot_set
-
-    stats = compute_hot_set(
-        spark.read.parquet(input_dir).select("conv_id"), hot_threshold=100
-    )
-    assert stats["total_rows"] == N_ROWS
-    assert 100 < stats["max_conv_rows"] <= N_ROWS
-
-    out_a = str(tmp_path_factory.mktemp("spread_default"))
-    out_b = str(tmp_path_factory.mktemp("spread_forced"))
-    run_pipeline(spark, input_dir, out_a, n_units=2, n_buckets=8,
+    out_a = str(tmp_path_factory.mktemp("fanout_default"))
+    out_b = str(tmp_path_factory.mktemp("fanout_split"))
+    run_pipeline(spark, input_dir, out_a, n_units=1, n_buckets=8,
                  resume=False)
-    os.environ["SPARK_GRAFT_SALT_TARGET_ROWS"] = "1"
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1k")
     try:
-        run_pipeline(spark, input_dir, out_b, n_units=2, n_buckets=8,
+        run_pipeline(spark, input_dir, out_b, n_units=1, n_buckets=8,
                      resume=False)
     finally:
-        del os.environ["SPARK_GRAFT_SALT_TARGET_ROWS"]
+        spark.conf.unset(key)
 
     def files_per_dir(root):
         counts = {}
-        for f in glob.glob(os.path.join(root, "sinks", "*", "*", "*",
+        for f in glob.glob(os.path.join(root, "sinks", "unit=*",
+                                        "sink_sev=*", "sink_key=*",
                                         "*.parquet")):
             counts.setdefault(os.path.dirname(f), 0)
             counts[os.path.dirname(f)] += 1
@@ -317,9 +315,7 @@ def test_salt_spread_scales_with_data(spark, input_dir, tmp_path_factory):
 
     a_counts = files_per_dir(out_a)
     b_counts = files_per_dir(out_b)
-    # default target (1M rows/writer) >> 4k-row input: one file per dir
-    assert max(a_counts.values()) == 1
-    # forced 1-row target: hot cells fan out across several writers
+    assert a_counts and max(a_counts.values()) == 1
     assert max(b_counts.values()) > 1
 
     cols = ["conv_id", "turn_idx", "sink_sev", "sink_key", "salt"]
