@@ -1,19 +1,16 @@
-"""Routing operator: fan-out sink assignment and the hot-conversation salt.
+"""Routing operator: fan-out sink assignment, plus a route-level hot set.
 
 Route key (FIXTURES.md §5): ``(severity_class, conv_bucket)`` where
 ``conv_bucket = pmod(xxhash64(conv_id), n_buckets)``; rows with a
 non-null ``err_code`` go to the dead-letter sink instead.
 
-Skew: hot conversations (detected by a cheap pre-aggregation,
-``compute_hot_set``) receive a per-row ``salt`` column.  The salt is not
-part of the write's shuffle key: the pipeline writes through a
-``rebalance``, and AQE (``optimizeSkewsInRebalancePartitions``, Spark
-3.3+) splits any oversized reduce partition of it from the measured
-map-output sizes.
-
-At 100 TB: the pre-agg is a partial-aggregated count per conv_id (small
-result ≪ input), the hot set is broadcast back, and the only full
-shuffle is the rebalance before the write.
+Skew is not handled here: the pipeline writes through a ``rebalance``,
+and AQE (``optimizeSkewsInRebalancePartitions``, Spark 3.3+) splits any
+oversized reduce partition of it from the measured map-output sizes.
+The pipeline calls ``with_route_columns`` without a hot set, so its
+sinks carry ``salt = 0``.  ``compute_hot_set`` and the ``hot_ids`` /
+``hot_df`` salt remain as a route-level helper that only the perfbench
+ladder and the tests use.
 """
 
 from __future__ import annotations

@@ -8,9 +8,10 @@ directories plus an atomically-renamed JSON marker written strictly
 skipped; partial (marker-less) unit output is deleted and reprocessed —
 exactly once, idempotent.
 
-The marker doubles as the lineage record: input files, hot-set size,
-wall time.  Row counts are not kept here: the pipeline derives them,
-with the metrics, from one read-back of the committed units' sinks.
+The marker doubles as the lineage record: input files and wall time.
+A resume checks the files against its own unit plan.  Row counts are
+not kept here: the pipeline derives them, with the metrics, from one
+read-back of the committed units' sinks.
 """
 
 from __future__ import annotations

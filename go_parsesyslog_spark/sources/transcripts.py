@@ -11,8 +11,8 @@ Mix: ~60% RFC3164 lines, ~30% octet-framed RFC5424, ~10% reference
 corpus lines injected verbatim (including all invalid lines → DLQ).
 
 Skew knob: the first ``hot_frac`` of conversations own ``hot_share`` of
-all rows (default 1% of convs → 30% of rows) to exercise the salted
-routing path.
+all rows (default 1% of convs → 30% of rows) to exercise skew in the
+fan-out write.
 
 The generator is vectorized pandas/numpy and writes plain parquet (the
 Iceberg runtime jars are not in this container; the layout and write

@@ -57,8 +57,8 @@ def _oracle(spark, input_dir):
     )
 
 
-KEY_COLS = ["conv_id", "turn_idx", "sink_sev", "sink_key", "message",
-            "priority", "severity", "host", "app", "msg_length"]
+KEY_COLS = ["conv_id", "turn_idx", "sink_sev", "sink_key", "salt",
+            "message", "priority", "severity", "host", "app", "msg_length"]
 
 
 def test_row_counts_conserved(spark, input_dir, pipeline_out):
@@ -218,6 +218,21 @@ def test_resume_skips_committed_units(spark, input_dir, tmp_path_factory):
     sinks = spark.read.parquet(os.path.join(out, "sinks"))
     assert sinks.count() == N_ROWS
     assert sinks.select("conv_id", "turn_idx").distinct().count() == N_ROWS
+
+
+def test_resume_rejects_a_changed_unit_plan(spark, input_dir,
+                                            tmp_path_factory):
+    """A resume skips units by id, so an id that now names other files
+    must not be skipped: with 2 units instead of 4, unit 0000 holds
+    two files where its marker records one.  Skipping it would report
+    a complete run over half the rows."""
+    out = str(tmp_path_factory.mktemp("replan_out"))
+    s1 = run_pipeline(spark, input_dir, out, n_units=4, n_buckets=8,
+                      resume=True, max_units=2)
+    assert s1["units_run"] == ["0000", "0001"]
+    with pytest.raises(ValueError, match="unit 0000.*resume=False"):
+        run_pipeline(spark, input_dir, out, n_units=2, n_buckets=8,
+                     resume=True)
 
 
 def test_hot_set_spills_and_broadcast_joins(spark, tmp_path_factory):

@@ -34,7 +34,6 @@ def main() -> None:
     p.add_argument("--out", required=True, help="sink root path")
     p.add_argument("--n-units", type=int, default=64)
     p.add_argument("--n-buckets", type=int, default=16)
-    p.add_argument("--salt-buckets", type=int, default=8)
     p.add_argument("--fmt", default="auto",
                    choices=["auto", "rfc3164", "rfc5424"])
     p.add_argument("--no-resume", action="store_true")
@@ -51,7 +50,6 @@ def main() -> None:
         args.out,
         fmt=args.fmt,
         n_buckets=args.n_buckets,
-        salt_buckets=args.salt_buckets,
         n_units=args.n_units,
         resume=not args.no_resume,
         max_units=args.max_units,
