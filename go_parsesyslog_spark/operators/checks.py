@@ -124,9 +124,10 @@ def check_constraints(
         ).select("c.constraint", "c.violations", "c.n_rows")
 
     # one shared total-row frame for every ref constraint (a per-
-    # constraint df.agg(count) would re-scan the fact table K times);
-    # with several refs the 1-row aggregate is materialized once so
-    # each branch reuses the result instead of re-deriving the plan
+    # constraint df.agg(count) would re-scan the fact table K times):
+    # every branch cross-joins the same 1-row aggregate, so Spark's
+    # exchange reuse computes it once (the other branches read a
+    # ReusedExchange)
     refs = [c for c in specials if c["kind"] == "ref_integrity"]
     for c in refs:
         if not reference or c["ref"] not in reference:
@@ -137,8 +138,6 @@ def check_constraints(
     total = None
     if refs:
         total = df.agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
-        if len(refs) > 1:
-            total = total.localCheckpoint()
     for c in refs:
         ref = reference[c["ref"]].select(
             F.col(c["ref_col"]).alias(c["col"])

@@ -34,6 +34,10 @@ _MERSENNE = (1 << 61) - 1
 # Doc count above which minhash_lsh_jaccard_pairs skips its text-bytes
 # probe (the gram table cannot fit a broadcast there).
 VERIFY_BROADCAST_DOCS = 2_000_000
+# Cap on the shingle bytes minhash_lsh_jaccard_pairs broadcasts into its
+# verify stage; above it the arrays attach by shuffle-hash join.
+# Raising it needs matching driver/executor heap.
+VERIFY_BROADCAST_BYTES = 256_000_000
 
 
 def _hash_shingles(
@@ -514,8 +518,6 @@ def minhash_lsh_jaccard_pairs(
     # also bounds the gram-table size for the attach-strategy choice
     # below (shingle bytes ≤ 8 × text bytes: ≤ one 8-byte hash per
     # character)
-    import os
-
     n_docs = df.count()
     n_member_rows = bands * n_docs
     shuffle_parts = int(
@@ -528,15 +530,13 @@ def minhash_lsh_jaccard_pairs(
     # table could plausibly fit a broadcast — at corpus scale the
     # count alone rules it out and the plan is byte-identical to the
     # shuffle-join path below with zero extra scans.
-    bcast_cap = int(
-        os.environ.get("SPARK_GRAFT_VERIFY_BROADCAST_BYTES", 256_000_000)
-    )
     gram_bytes_bound = None
     if n_docs <= VERIFY_BROADCAST_DOCS:
         tb = df.agg(F.sum(F.octet_length(text_col))).collect()[0][0]
         # shingle bytes ≤ 8 × text bytes (≤ one 8-byte hash per char)
         gram_bytes_bound = 8 * int(tb or 0)
-    if gram_bytes_bound is not None and gram_bytes_bound <= bcast_cap:
+    if (gram_bytes_bound is not None
+            and gram_bytes_bound <= VERIFY_BROADCAST_BYTES):
         # Attach the arrays AFTER the verify-group shuffle (guide §2.3
         # "shuffle keys and metadata, move heavy bytes once"): the
         # narrow member rows shuffle to their coarse verify group

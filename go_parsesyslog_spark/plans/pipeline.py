@@ -26,8 +26,9 @@ Scale design notes (100 TB / 1000 executors):
   every sink row has ``salt = 0``;
 * unit size bounds the blast radius of a failure — a killed run loses
   at most the in-flight units; the marker rename is atomic;
-* the fan-out shuffle is a rebalance keyed (sink_sev, sink_key): AQE
-  splits a reduce partition larger than
+* the fan-out shuffle is a rebalance keyed (sink_sev, sink_key) with no
+  width of its own: it starts at ``spark.sql.shuffle.partitions``, and
+  AQE coalesces small reduce partitions and splits one larger than
   ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` from the measured
   map output, so a hot cell spreads over several writer tasks with no
   size estimate up front;
@@ -99,7 +100,6 @@ def _process_unit(
     fmt: str,
     ref_now,
     n_buckets: int,
-    n_shuffle: int,
 ) -> None:
     df = spark.read.parquet(*files)
     parsed = parse_logs(df, text_col="text", fmt=fmt, ref_now=ref_now)
@@ -124,7 +124,7 @@ def _process_unit(
     # whole reduce partitions, so the cold cells hashed into the same
     # partition are split with it; a smaller advisory size trades more
     # files for less skew.
-    shuffled = final.hint("rebalance", n_shuffle, "sink_sev", "sink_key")
+    shuffled = final.hint("rebalance", "sink_sev", "sink_key")
     write_partitioned(shuffled, unit_out, ["sink_sev", "sink_key"])
 
 
@@ -180,20 +180,15 @@ def run_pipeline(
     # unit's stage boundaries (shuffle map → reduce → commit) overlap
     # another unit's compute — measured at local[32], 2 in-flight units
     # leave ~40% of cores idle between stages while 4 keep them busy.
-    # Each unit's fan-out shuffle is sized to its core share so the
-    # combined in-flight task count stays ≈ the core count.
     total_cores = spark.sparkContext.defaultParallelism
     in_flight = max(1, min(len(units), max(2, total_cores // 2)))
-    n_shuffle = max(8, total_cores // in_flight)
 
     def run_one(unit):
         unit_id, files = unit
         lineage.clean_partial_unit(out_root, unit_id)
         unit_out = os.path.join(out_root, "sinks", f"unit={unit_id}")
         tu = time.time()
-        _process_unit(
-            spark, files, unit_out, fmt, ref_now, n_buckets, n_shuffle,
-        )
+        _process_unit(spark, files, unit_out, fmt, ref_now, n_buckets)
         lineage.record_unit(
             out_root,
             {

@@ -1,10 +1,11 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory.
 
-One place to hold the settings that matter at 100 TB: AQE for runtime
-re-planning (shuffle coalescing + skew-join splitting), Arrow for the
-vectorized-UDF parse path, UTC session time so timestamp semantics are
-deterministic across the cluster, and shuffle partitions sized to the
-local core count.
+The package defaults (the ``conf`` dict in :func:`get_spark`) are the
+settings Spark does not already choose well here, among them Arrow for
+the vectorized-UDF parse path, UTC session time so timestamp semantics
+are deterministic across the cluster, and a local master with shuffle
+partitions sized to the cores this process may run on.  Every other
+key, AQE and scan split sizes included, keeps Spark's own default.
 
 Settings have one source, Spark's own configuration.  Precedence,
 highest first:
@@ -17,9 +18,10 @@ highest first:
    where ``get_spark`` starts the JVM itself.
 
 Under plain ``python`` there is no launcher, so every key not passed
-explicitly takes the package default: ``local[$SPARK_GRAFT_CPUS]``
-(all cores when unset), as many shuffle partitions, 16m/1m scan
-splits and a 16g driver heap.
+explicitly takes the package default: ``local[N]`` with N the cores in
+the process's CPU affinity mask (what ``nproc`` prints), N shuffle
+partitions and a 16g driver heap.  To use fewer cores pass
+``master="local[k]"`` (``--master`` under spark-submit).
 """
 
 from __future__ import annotations
@@ -51,7 +53,8 @@ def get_spark(
             pkg_root + (os.pathsep + existing if existing else "")
         )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    # the cores this process may run on: what `nproc` prints
+    cpus = len(os.sched_getaffinity(0))
 
     # One BLAS thread per Python worker (guide §4.2): numpy matmuls run
     # inside N concurrent forked workers — letting each spawn its own
@@ -66,19 +69,6 @@ def get_spark(
     conf = {
         "spark.master": f"local[{cpus}]",
         "spark.sql.shuffle.partitions": str(cpus),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        # Scan-split sizing is SCALE-DEPENDENT (guide §6): the default
-        # 128 MB split is right for a 100 TB directory of large files,
-        # but the bench tables are single files of 3-130 MB whose scans
-        # then run 1-2 tasks on a 32-core host.  The local default
-        # splits multi-row-group files (lineitem: 6 row groups → 6
-        # decode tasks); production deployments pass
-        # `--conf spark.sql.files.maxPartitionBytes=128m` (or larger,
-        # §6) to keep per-task scheduling overhead amortised.
-        "spark.sql.files.maxPartitionBytes": "16m",
-        "spark.sql.files.openCostInBytes": "1m",
         # Allow shuffled-hash join where the per-partition build side
         # fits (guide §3.1/§9): skips the two sorts of sort-merge; AQE
         # still falls back/handles skew.

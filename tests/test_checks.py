@@ -169,16 +169,26 @@ def test_allow_null_on_colless_predicate_raises(spark):
 def test_multiple_ref_constraints_share_total(spark):
     from go_parsesyslog_spark.operators.checks import check_constraints
 
-    df = spark.createDataFrame([(1, 10), (2, 20), (3, 99)],
-                               "a long, b long")
-    dim_a = spark.createDataFrame([(1,), (2,)], "k long")
-    dim_b = spark.createDataFrame([(10,), (20,)], "k long")
+    # VALUES inputs scan as LocalTableScan, so any RDD scan in the plan
+    # would be a checkpoint
+    df = spark.sql(
+        "SELECT * FROM VALUES (1L, 10L), (2L, 20L), (3L, 99L) AS t(a, b)")
+    dim_a = spark.sql("SELECT * FROM VALUES (1L), (2L) AS t(k)")
+    dim_b = spark.sql("SELECT * FROM VALUES (10L), (20L) AS t(k)")
+    checked = check_constraints(df, [
+        {"name": "fk_a", "kind": "ref_integrity", "col": "a",
+         "ref": "da", "ref_col": "k"},
+        {"name": "fk_b", "kind": "ref_integrity", "col": "b",
+         "ref": "db", "ref_col": "k"},
+    ], reference={"da": dim_a, "db": dim_b})
     out = {r["constraint"]: (r["violations"], r["n_rows"])
-           for r in check_constraints(df, [
-               {"name": "fk_a", "kind": "ref_integrity", "col": "a",
-                "ref": "da", "ref_col": "k"},
-               {"name": "fk_b", "kind": "ref_integrity", "col": "b",
-                "ref": "db", "ref_col": "k"},
-           ], reference={"da": dim_a, "db": dim_b}).collect()}
+           for r in checked.collect()}
     assert out["fk_a"] == (1, 3)   # a=3 orphaned
     assert out["fk_b"] == (1, 3)   # b=99 orphaned
+    # the shared total is computed once by exchange reuse, not cut out
+    # of the lineage by a checkpoint
+    plan = checked._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "ExistingRDD" not in final and "LogicalRDD" not in final
+    assert final.count("output=[n_rows") == 1, final
+    assert final.count("ReusedExchange [n_rows") == 1, final

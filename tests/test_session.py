@@ -1,6 +1,7 @@
 """Settings precedence of ``get_spark``: a launcher's conf (spark-submit
-flags) wins over the package defaults, and plain ``python`` gets the
-defaults.
+flags) wins over the package defaults, plain ``python`` gets the
+defaults, and a key the package does not set keeps Spark's own
+default (scan splits: 128m / 4m).
 
 Each case runs a tiny probe script in its own driver process, so the
 launcher's JVM is the one the probe's session uses."""
@@ -56,7 +57,7 @@ def test_spark_submit_settings_win(tmp_path):
         "master": "local[1]",
         "driver_memory": "1g",
         "max_partition_bytes": "128m",
-        "open_cost_bytes": "1m",
+        "open_cost_bytes": "4194304b",
         "shuffle_partitions": "3",
     }
 
@@ -67,16 +68,16 @@ def test_spark_submit_heap_is_not_misreported(tmp_path):
     got = _probe(tmp_path, [SUBMIT, "--master", "local[1]"])
     assert got["master"] == "local[1]"
     assert got["driver_memory"] is None
-    assert got["max_partition_bytes"] == "16m"
+    assert got["max_partition_bytes"] == "134217728b"
 
 
 def test_plain_python_gets_package_defaults(tmp_path):
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8))
+    cpus = str(len(os.sched_getaffinity(0)))
     got = _probe(tmp_path, [sys.executable])
     assert got == {
         "master": f"local[{cpus}]",
         "driver_memory": "16g",
-        "max_partition_bytes": "16m",
-        "open_cost_bytes": "1m",
+        "max_partition_bytes": "134217728b",
+        "open_cost_bytes": "4194304b",
         "shuffle_partitions": cpus,
     }

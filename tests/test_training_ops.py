@@ -68,16 +68,14 @@ def test_lsh_verify_broadcast_and_shuffle_paths_equal(
     """The verify stage picks its gram-attach strategy by data size
     (broadcast below the cap, shuffle-hash join above) — both paths
     must emit the identical verified pair set."""
-    from go_parsesyslog_spark.operators.dedup import (
-        minhash_lsh_jaccard_pairs,
-    )
+    from go_parsesyslog_spark.operators import dedup
 
     bcast = set(
-        map(tuple, minhash_lsh_jaccard_pairs(docs_with_dups).collect())
+        map(tuple, dedup.minhash_lsh_jaccard_pairs(docs_with_dups).collect())
     )
-    monkeypatch.setenv("SPARK_GRAFT_VERIFY_BROADCAST_BYTES", "0")
+    monkeypatch.setattr(dedup, "VERIFY_BROADCAST_BYTES", 0)
     shuf = set(
-        map(tuple, minhash_lsh_jaccard_pairs(docs_with_dups).collect())
+        map(tuple, dedup.minhash_lsh_jaccard_pairs(docs_with_dups).collect())
     )
     assert bcast == shuf and len(bcast) > 0
 
