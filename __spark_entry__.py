@@ -633,35 +633,19 @@ def q_bpe_token_stats(spark, sf_dir):
 def q_ann_cosine_topk(spark, sf_dir):
     """Similarity search: brute-force cosine top-3 neighbors for the
     first 5 vectors (broadcast query side, JVM-side dot products)."""
+    from go_parsesyslog_spark.operators.similarity import (
+        cosine_topk_bruteforce,
+    )
+
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
+        F.col("vec_id").alias("query_id"), "embedding"
     )
-    pairs = emb.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
-    dot = F.aggregate(
-        F.zip_with("embedding", "qv", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    sim = dot / (norm(F.col("embedding")) * norm(F.col("qv")))
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), "vec_id")
-    return (
-        pairs.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("vec_id").cast("long").alias("neighbor_id"),
-            F.round("sim", 3).alias("cosine_sim"),
-        )
+    return cosine_topk_bruteforce(emb, q, k=3).select(
+        F.col("query_id").cast("long").alias("query_id"),
+        F.col("rank").cast("long").alias("rank"),
+        F.col("neighbor_id").cast("long").alias("neighbor_id"),
+        F.round("sim", 3).alias("cosine_sim"),
     )
 
 

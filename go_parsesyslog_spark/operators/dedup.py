@@ -38,11 +38,13 @@ VERIFY_BROADCAST_DOCS = 2_000_000
 # verify stage; above it the arrays attach by shuffle-hash join.
 # Raising it needs matching driver/executor heap.
 VERIFY_BROADCAST_BYTES = 256_000_000
+# Minhash LSH buckets above this many members emit (and verify) only
+# their sorted-adjacent chain edges instead of all pairs; read at call
+# time by both minhash pair operators, so they always agree.
+BUCKET_PAIR_CAP = 4096
 
 
-def _hash_shingles(
-    texts: pd.Series, k: int, sentinel: bool = True
-) -> list[np.ndarray]:
+def _hash_shingles(texts: pd.Series, k: int) -> list[np.ndarray]:
     """Per-doc arrays of 64-bit k-shingle hashes, vectorized ACROSS the
     whole Arrow batch: all docs' normalized bytes are concatenated (with
     a k-byte NUL fence between docs), one sliding-window polynomial hash
@@ -56,19 +58,15 @@ def _hash_shingles(
     sizes/intersections computed on these hashes are EXACT, and a SQL
     oracle can recompute them bit-identically from ascii() codes.
 
-    ``sentinel=True`` gives docs shorter than k a single ``[0]`` hash
-    (so minhash signatures stay well-defined); ``sentinel=False`` gives
-    them an empty array (the truthful shingle set)."""
+    Docs shorter than k get an empty array (the truthful shingle set);
+    :func:`_minhash` maps it to a surrogate."""
     norm = [" ".join(t.lower().split()).encode("utf-8")
             for t in texts.fillna("")]
-    def short(_ln: int) -> np.ndarray:
-        return (np.zeros(1, dtype=np.uint64) if sentinel
-                else np.empty(0, dtype=np.uint64))
-
+    empty = np.empty(0, dtype=np.uint64)
     fence = b"\x00" * k
     buf = np.frombuffer(fence.join(norm) + fence, dtype=np.uint8)
     if len(buf) < k:
-        return [short(len(b)) for b in norm]
+        return [empty for _ in norm]
     pows = np.power(np.uint64(257), np.arange(k, dtype=np.uint64),
                     dtype=np.uint64)
     # k shifted full-buffer slices instead of a materialized
@@ -100,12 +98,11 @@ def _hash_shingles(
     out = []
     for s, ln in zip(starts, lens):
         if ln < k:
-            out.append(short(ln))
+            out.append(empty)
             continue
         h = hashes[s: s + ln - k + 1]
         v = valid[s: s + ln - k + 1]
-        h = h[v]
-        out.append(np.unique(h) if len(h) else short(ln))
+        out.append(np.unique(h[v]))
     return out
 
 
@@ -117,6 +114,16 @@ def _minhash_coeffs(num_hashes: int, seed: int) -> tuple[np.ndarray, np.ndarray]
     a = rng.integers(1, _MERSENNE, num_hashes, dtype=np.uint64)
     b = rng.integers(0, _MERSENNE, num_hashes, dtype=np.uint64)
     return a, b
+
+
+def _minhash(hashes: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """One doc's int64 signature: min over its shingle hashes of each
+    h_i.  An empty shingle set minhashes the ``{0}`` surrogate, so docs
+    shorter than k still get a well-defined signature."""
+    x = (hashes if hashes.size else np.zeros(1, dtype=np.uint64)) % _MERSENNE
+    # (num_hashes, n_shingles) — min over shingles per hash fn
+    vals = (np.outer(a, x) + b[:, None]) % _MERSENNE
+    return vals.min(axis=1).astype(np.int64)
 
 
 def minhash_signatures(
@@ -141,13 +148,8 @@ def minhash_signatures(
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def sig_udf(texts: pd.Series) -> pd.Series:
-        sigs = []
-        for hashes in _hash_shingles(texts, shingle_k):
-            x = hashes.astype(np.uint64) % _MERSENNE
-            # (num_hashes, n_shingles) — min over shingles per hash fn
-            vals = (np.outer(a, x) + b[:, None]) % _MERSENNE
-            sigs.append(vals.min(axis=1).astype(np.int64))
-        return pd.Series(sigs)
+        return pd.Series([_minhash(h, a, b)
+                          for h in _hash_shingles(texts, shingle_k)])
 
     return df.withColumn("signature", sig_udf(F.col(text_col)))
 
@@ -169,6 +171,16 @@ def _banded_keys(
                 ),
             )
         ).alias("band", "band_hash"),
+    )
+
+
+def _lsh_buckets(keyed: DataFrame, keys: list[str], id_col: str) -> DataFrame:
+    """(keys…, ids) rows: each LSH bucket's sorted member ids, buckets
+    with fewer than two members dropped before anything else moves."""
+    return (
+        keyed.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .filter(F.size("ids") >= 2)
     )
 
 
@@ -209,6 +221,32 @@ def _bucket_pairs(
     )
 
 
+def _shuffle_parts(df: DataFrame) -> int:
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+
+
+def _verify_group_count(df: DataFrame, n_rows: int, budget: int) -> int:
+    """Coarse verify-group count, ``max(4 × shuffle.partitions,
+    ⌈n_rows / budget⌉)``: it scales with the verify input, so average
+    per-group residency stays near ``budget`` rows at any corpus size."""
+    return max(4 * _shuffle_parts(df), -(-n_rows // budget))
+
+
+def _bucket_spans(ids: np.ndarray, *keys: np.ndarray):
+    """Recover the buckets of one coarse verify group: ``order`` sorts
+    its rows by (keys…, id), and ``spans`` are the [s, e) ranges of that
+    order holding one bucket of two or more members."""
+    order = np.lexsort((ids, *keys[::-1]))
+    first = np.zeros(len(order), dtype=bool)
+    first[:1] = True
+    for key in keys:
+        k = key[order]
+        first[1:] |= k[1:] != k[:-1]
+    bounds = np.append(np.flatnonzero(first), len(order))
+    spans = [(s, e) for s, e in zip(bounds[:-1], bounds[1:]) if e - s >= 2]
+    return order, spans
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -227,7 +265,7 @@ def minhash_lsh_pairs(
     Scale: each doc emits ``bands`` (band, hash) rows; the groupBy key
     is (band, band_hash) so the shuffle is uniform unless the corpus is
     pathological.  Mega-buckets (boilerplate clusters beyond
-    ``bucket_pair_cap`` members) would explode quadratically under the
+    ``BUCKET_PAIR_CAP`` members) would explode quadratically under the
     all-pairs join — 10k ids → 5×10⁷ pairs — so above the cap the
     bucket emits a sorted CHAIN of edges instead (id₁-id₂, id₂-id₃, …):
     O(bucket) candidates that keep the whole cluster CONNECTED for the
@@ -240,18 +278,13 @@ def minhash_lsh_pairs(
     the downstream Jaccard verify breaks the cluster in two, and the
     "LSH candidates ⊇ all true J≥t pairs" recall property holds only
     for buckets within the cap.  Use ``lsh_bucket_stats`` to check
-    whether any bucket exceeded ``bucket_pair_cap`` before relying on
+    whether any bucket exceeded ``BUCKET_PAIR_CAP`` before relying on
     completeness (tests/test_training_ops.py pins this at test scale).
     """
     sigs = minhash_signatures(df, text_col, num_hashes, shingle_k, seed)
-    bucket_pair_cap = 4096
     banded = _banded_keys(sigs, id_col, num_hashes, bands)
-    buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    return _bucket_pairs(buckets, "ids", bucket_pair_cap,
+    buckets = _lsh_buckets(banded, ["band", "band_hash"], id_col)
+    return _bucket_pairs(buckets, "ids", BUCKET_PAIR_CAP,
                          "doc_a", "doc_b").distinct()
 
 
@@ -285,7 +318,6 @@ def minhash_lsh_jaccard_pairs(
     shingle_k: int = 5,
     seed: int = 42,
     threshold: tuple[int, int] = (9, 10),
-    bucket_pair_cap: int = 4096,
     dense_cells: int = 150_000_000,
     group_budget_rows: int = 4096,
 ) -> DataFrame:
@@ -315,7 +347,7 @@ def minhash_lsh_jaccard_pairs(
       4. per-bucket applyInPandas: unique-shingle index → A (m×S) 0/1
          matrix → A·Aᵀ = all pairwise intersection counts; union sizes
          from set sizes; emit pairs passing the threshold.  Buckets
-         above ``bucket_pair_cap`` verify the sorted-adjacent chain
+         above ``BUCKET_PAIR_CAP`` verify the sorted-adjacent chain
          edges only (exactly the pairs the candidate op emits);
          degenerate huge-and-diverse buckets (m·S > ``dense_cells``)
          fall back to per-pair sorted-array intersection.
@@ -323,7 +355,7 @@ def minhash_lsh_jaccard_pairs(
 
     GROUP-MEMORY BOUND (VERDICT r3 #3): an applyInPandas group holds
     every member's shingle array in memory at once.  All-pairs buckets
-    are bounded by construction (≤ ``bucket_pair_cap`` members — a
+    are bounded by construction (≤ ``BUCKET_PAIR_CAP`` members — a
     corpus-size-independent constant), but a CHAIN bucket is one whole
     mega-cluster: at 100 TB a boilerplate bucket of 10⁷ docs would put
     the entire cluster's arrays in a single task.  Chain buckets are
@@ -354,7 +386,7 @@ def minhash_lsh_jaccard_pairs(
 
     def _sig_grams(texts):
         sigs_out, shs = [], []
-        for hashes in _hash_shingles(texts, shingle_k, sentinel=False):
+        for hashes in _hash_shingles(texts, shingle_k):
             # shingles ship as PACKED little-endian int64 BYTES, not
             # array<bigint>: the JVM only shuffles this column (the
             # verify decodes it with np.frombuffer), and Arrow binary
@@ -362,13 +394,7 @@ def minhash_lsh_jaccard_pairs(
             # per-element array writes (measured ~2.6 s of the 2.8 s
             # UDF stage was conversion, not Python compute)
             shs.append(hashes.astype("<i8").tobytes())
-            # sentinel=True semantics for the signature side: an empty
-            # shingle set minhashes the {0} surrogate (see
-            # _hash_shingles), keeping signatures well-defined
-            hx = hashes if hashes.size else np.zeros(1, dtype=np.uint64)
-            x = hx.astype(np.uint64) % _MERSENNE
-            vals = (np.outer(a, x) + b[:, None]) % _MERSENNE
-            sigs_out.append(vals.min(axis=1).astype(np.int64))
+            sigs_out.append(_minhash(hashes, a, b))
         return pd.DataFrame({"signature": sigs_out, "sh": shs})
 
     _sig_grams.__annotations__ = {"texts": pd.Series,
@@ -383,12 +409,9 @@ def minhash_lsh_jaccard_pairs(
                 F.col("_sg.sh").alias("sh"))
         .localCheckpoint(eager=False)
     )
+    pair_cap = BUCKET_PAIR_CAP  # the verify closure ships this value
     banded = _banded_keys(sg, id_col, num_hashes, bands)
-    buckets = (
-        banded.groupBy("band", "band_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
+    buckets = _lsh_buckets(banded, ["band", "band_hash"], id_col)
     # (band, band_hash, bucket-size, group, id) member rows in ONE
     # posexplode branch.  Small (all-pairs) buckets get the constant
     # group 0; chain buckets are salted into sorted windows of
@@ -402,7 +425,7 @@ def minhash_lsh_jaccard_pairs(
     # one signature pass and one aggregation.
     g = F.floor(F.col("pos") / group_budget_rows)
     grps = F.when(
-        F.col("bn") <= bucket_pair_cap,
+        F.col("bn") <= pair_cap,
         F.array(F.lit(0).cast("long")),
     ).when(
         (F.col("pos") % group_budget_rows == 0) & (F.col("pos") > 0),
@@ -440,7 +463,7 @@ def minhash_lsh_jaccard_pairs(
         lens = np.array([a.size for a in arrs], dtype=np.int64)
         # chain mode follows the BUCKET size (bn), not the group size —
         # a salted sub-group of a mega-bucket is small but still chains
-        if bn > bucket_pair_cap:
+        if bn > pair_cap:
             # chain edges only — same candidate set as minhash_lsh_pairs
             # (the sub-group is a contiguous sorted range plus the
             # previous boundary member, so local adjacency == the global
@@ -479,27 +502,18 @@ def minhash_lsh_jaccard_pairs(
     # stays bounded because the group count scales with the member-row
     # count (below), the same discipline as simhash's verify.
     def verify_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        band = pdf["band"].to_numpy(dtype=np.int64)
-        bh = pdf["band_hash"].to_numpy(dtype=np.int64)
-        grp = pdf["grp"].to_numpy(dtype=np.int64)
-        bn = pdf["bn"].to_numpy(dtype=np.int64)
-        ids_all = pdf[id_col].to_numpy()
-        sh_all = pdf["sh"].to_numpy()
-        order = np.lexsort((ids_all, grp, bh, band))
-        band, bh, grp, bn = band[order], bh[order], grp[order], bn[order]
-        ids_all = ids_all[order]
-        sh_all = sh_all[order]
-        bounds = np.flatnonzero(np.concatenate((
-            [True],
-            (np.diff(band) != 0) | (np.diff(bh) != 0) | (np.diff(grp) != 0),
-        )))
-        bounds = np.append(bounds, len(band))
+        ids = pdf[id_col].to_numpy()
+        order, spans = _bucket_spans(
+            ids, *[pdf[c].to_numpy(dtype=np.int64)
+                   for c in ("band", "band_hash", "grp")]
+        )
+        ids_all = ids[order]
+        sh_all = pdf["sh"].to_numpy()[order]
+        bn = pdf["bn"].to_numpy(dtype=np.int64)[order]
         out: list = []
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            if e - s >= 2:
-                arrs = [np.frombuffer(a, dtype=np.int64)
-                        for a in sh_all[s:e]]
-                verify_bucket(ids_all[s:e], arrs, int(bn[s]), out)
+        for s, e in spans:
+            arrs = [np.frombuffer(a, dtype=np.int64) for a in sh_all[s:e]]
+            verify_bucket(ids_all[s:e], arrs, int(bn[s]), out)
         if not out:
             return pd.DataFrame({
                 "doc_a": [], "doc_b": [],
@@ -519,11 +533,7 @@ def minhash_lsh_jaccard_pairs(
     # below (shingle bytes ≤ 8 × text bytes: ≤ one 8-byte hash per
     # character)
     n_docs = df.count()
-    n_member_rows = bands * n_docs
-    shuffle_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    n_groups = max(4 * shuffle_parts, -(-n_member_rows // group_budget_rows))
+    n_groups = _verify_group_count(df, bands * n_docs, group_budget_rows)
     vgrp = F.pmod(F.xxhash64("band", "band_hash", "grp"), F.lit(n_groups))
     # The text-bytes probe is itself a text-column scan, so it only
     # runs when the (column-pruned, cheap) doc count says the gram
@@ -547,7 +557,7 @@ def minhash_lsh_jaccard_pairs(
         # 5.08 → 3.37 s at 10x, identical pair sets.
         grouped = (
             members.withColumn("_vgrp", vgrp)
-            .repartition(shuffle_parts, "_vgrp")
+            .repartition(_shuffle_parts(df), "_vgrp")
             .join(F.broadcast(grams), id_col)
         )
     else:
@@ -614,6 +624,83 @@ def _cc_local_labels(edges: DataFrame) -> DataFrame:
     )
 
 
+def _edge_signature(e: DataFrame) -> tuple:
+    """Order-insensitive multiset fingerprint of an edge set: count
+    plus two independent hash sums (canonical orientation) — a star
+    round that leaves it unchanged has reached the fixpoint."""
+    lo, hi = F.least("u", "v"), F.greatest("u", "v")
+    row = e.agg(
+        F.count(F.lit(1)).alias("n"),
+        # decimal(38) accumulator: a bigint sum overflows under ANSI
+        F.sum(F.xxhash64(lo, hi).cast("decimal(38,0)")).alias("h1"),
+        F.sum(F.xxhash64(hi, lo, F.lit(7)).cast("decimal(38,0)"))
+        .alias("h2"),
+    ).collect()[0]
+    return (row["n"], row["h1"], row["h2"])
+
+
+def _cc_star_labels(
+    edges: DataFrame, prev_sig: tuple, max_iters: int
+) -> DataFrame:
+    """(node, lbl=component-min) for every node of ``edges`` by the
+    distributed star alternation of :func:`dedup_clusters`;
+    ``prev_sig`` is ``edges``' own :func:`_edge_signature`."""
+    for _ in range(max_iters):
+        # large-star: symmetric neighborhoods; every node u attaches
+        # its larger neighbors to m = min(N(u) ∪ {u})
+        nb = edges.unionByName(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        mins = nb.groupBy("u").agg(F.min("v").alias("mv"))
+        # no distinct here: small-star's canonical orientation dedups
+        # immediately below, saving a full shuffle per round
+        large = (
+            nb.join(mins, "u")
+            .withColumn("m", F.least("u", "mv"))
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+        )
+        # small-star: orient child → smaller; u and its smaller
+        # neighbors (except the min m) all attach to m
+        o = (
+            large.select(
+                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+            )
+            .distinct()
+        )
+        omins = o.groupBy("u").agg(F.min("v").alias("m"))
+        edges = (
+            o.join(omins, "u")
+            .filter(F.col("v") != F.col("m"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .unionByName(omins.select("u", F.col("m").alias("v")))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            .localCheckpoint(eager=True)  # truncate per-round lineage
+        )
+        sig = _edge_signature(edges)
+        if sig == prev_sig:
+            break
+        prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"dedup_clusters did not converge within max_iters={max_iters} "
+            "star rounds (geometric contraction makes that astronomically "
+            "deep or a logic error) — refusing to return partial (wrong) "
+            "canonical ids"
+        )
+    # fixpoint edges are stars: (child, component-min); centers label
+    # themselves
+    stars = edges.select(
+        F.greatest("u", "v").alias("node"), F.least("u", "v").alias("lbl")
+    )
+    centers = stars.select(F.col("lbl").alias("node")).distinct().withColumn(
+        "lbl", F.col("node")
+    )
+    return stars.unionByName(centers)
+
+
 def dedup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
@@ -675,34 +762,7 @@ def dedup_clusters(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # Only nodes that appear in the pair graph can ever move — in a
-    # real corpus the overwhelming majority of docs are singletons, so
-    # the iteration runs on the (small) connected subgraph and the
-    # untouched docs are unioned back at the end.  At 100 TB this is
-    # the difference between iterating on near-dup clusters and
-    # iterating on the whole corpus.
-    connected = (
-        edges.select(F.col("u").alias("node"))
-        .unionByName(edges.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    def _signature(e: DataFrame):
-        # order-insensitive multiset fingerprint of the edge set: count
-        # plus two independent hash sums (canonical orientation) — a
-        # round that leaves it unchanged has reached the fixpoint
-        lo, hi = F.least("u", "v"), F.greatest("u", "v")
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38) accumulator: a bigint sum overflows under ANSI
-            F.sum(F.xxhash64(lo, hi).cast("decimal(38,0)")).alias("h1"),
-            F.sum(F.xxhash64(hi, lo, F.lit(7)).cast("decimal(38,0)"))
-            .alias("h2"),
-        ).collect()[0]
-        return (row["n"], row["h1"], row["h2"])
-
-    prev_sig = _signature(edges)
+    prev_sig = _edge_signature(edges)
     # SMALL pair graphs (the common case even at 100 TB — the verified
     # near-dup subgraph is orders of magnitude smaller than the corpus)
     # skip the distributed loop entirely: each star round costs ~6 tiny
@@ -716,72 +776,19 @@ def dedup_clusters(
     # by the local_edge_cap=0 tests.
     if prev_sig[0] <= local_edge_cap:
         labels = _cc_local_labels(edges)
-        singletons = docs.select(F.col(id_col).alias("node")).join(
-            connected, "node", "left_anti"
-        )
-        return (
-            labels.unionByName(singletons.withColumn("lbl", F.col("node")))
-            .select(
-                F.col("node").alias(id_col), F.col("lbl").alias("canonical_id")
-            )
-        )
-    converged = False
-    for _ in range(max_iters):
-        # large-star: symmetric neighborhoods; every node u attaches
-        # its larger neighbors to m = min(N(u) ∪ {u})
-        nb = edges.unionByName(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = nb.groupBy("u").agg(F.min("v").alias("mv"))
-        # no distinct here: small-star's canonical orientation dedups
-        # immediately below, saving a full shuffle per round
-        large = (
-            nb.join(mins, "u")
-            .withColumn("m", F.least("u", "mv"))
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
-        # small-star: orient child → smaller; u and its smaller
-        # neighbors (except the min m) all attach to m
-        o = (
-            large.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            .distinct()
-        )
-        omins = o.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            o.join(omins, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(omins.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)  # truncate per-round lineage
-        )
-        edges = small
-        sig = _signature(edges)
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters did not converge within max_iters={max_iters} "
-            "star rounds (geometric contraction makes that astronomically "
-            "deep or a logic error) — refusing to return partial (wrong) "
-            "canonical ids"
-        )
-    # fixpoint edges are stars: (child, component-min); centers label
-    # themselves, untouched docs are singletons
-    stars = edges.select(
-        F.greatest("u", "v").alias("node"), F.least("u", "v").alias("lbl")
+    else:
+        labels = _cc_star_labels(edges, prev_sig, max_iters)
+    # Only nodes that appear in the pair graph can ever move — in a
+    # real corpus the overwhelming majority of docs are singletons, so
+    # the iteration runs on the (small) connected subgraph and the
+    # untouched docs are unioned back here, labelling themselves.  At
+    # 100 TB this is the difference between iterating on near-dup
+    # clusters and iterating on the whole corpus.
+    connected = (
+        edges.select(F.col("u").alias("node"))
+        .unionByName(edges.select(F.col("v").alias("node")))
+        .distinct()
     )
-    centers = stars.select(F.col("lbl").alias("node")).distinct().withColumn(
-        "lbl", F.col("node")
-    )
-    labels = stars.unionByName(centers)
     singletons = docs.select(F.col(id_col).alias("node")).join(
         connected, "node", "left_anti"
     )
@@ -951,22 +958,16 @@ def simhash_near_dup_pairs(
     # overhead at sf0.1).  Buckets are recovered inside the call with a
     # lexsort + boundary scan — per-bucket cost drops to ~50 µs.
     def verify_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        bi = pdf["block_idx"].to_numpy(dtype=np.int64)
-        bv = pdf["block_val"].to_numpy(dtype=np.int64)
-        ids_all = pdf[id_col].to_numpy()
-        fps_all = pdf["simhash"].to_numpy().astype(np.uint64)
-        order = np.lexsort((ids_all, bv, bi))
-        bi, bv = bi[order], bv[order]
-        ids_all, fps_all = ids_all[order], fps_all[order]
-        bounds = np.flatnonzero(
-            np.concatenate(([True], (np.diff(bi) != 0) | (np.diff(bv) != 0)))
+        ids = pdf[id_col].to_numpy()
+        order, spans = _bucket_spans(
+            ids, pdf["block_idx"].to_numpy(dtype=np.int64),
+            pdf["block_val"].to_numpy(dtype=np.int64),
         )
-        bounds = np.append(bounds, len(bi))
+        ids_all = ids[order]
+        fps_all = pdf["simhash"].to_numpy().astype(np.uint64)[order]
         out_a, out_b, out_h = [], [], []
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            if e - s >= 2:
-                verify_bucket(ids_all[s:e], fps_all[s:e],
-                              out_a, out_b, out_h)
+        for s, e in spans:
+            verify_bucket(ids_all[s:e], fps_all[s:e], out_a, out_b, out_h)
         return pd.DataFrame({
             "doc_a": np.concatenate(out_a) if out_a else [],
             "doc_b": np.concatenate(out_b) if out_b else [],
@@ -976,13 +977,7 @@ def simhash_near_dup_pairs(
 
     # group count scales with the corpus so per-group residency is
     # bounded at any scale (the count() is a metadata-cheap scan)
-    n_block_rows = 4 * df.count()
-    n_groups = max(
-        4 * int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        ),
-        -(-n_block_rows // rows_per_group_budget),  # ceil div
-    )
+    n_groups = _verify_group_count(df, 4 * df.count(), rows_per_group_budget)
     grouped = blocks.withColumn(
         "grp", F.pmod(F.xxhash64("block_idx", "block_val"), F.lit(n_groups))
     )

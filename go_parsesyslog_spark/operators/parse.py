@@ -155,9 +155,13 @@ def parse_logs(
     entirely JVM-side (whole-stage codegen — see operators/native_fast
     for why this matters at high core counts); everything else takes the
     Arrow-batched exact Python parser, in the same narrow projection.
-    ``engine="arrow"`` forces the Python engine for all rows.
+    ``engine="arrow"`` forces the Python engine for all rows; so does a
+    format registered through :func:`registry.register`, which has no
+    native counterpart.
     """
-    if engine != "native":
+    want3 = fmt in (AUTO, registry.RFC3164)
+    want5 = fmt in (AUTO, registry.RFC5424)
+    if engine != "native" or not (want3 or want5):
         return parse_logs_arrow(df, text_col, fmt, ref_now)
 
     from go_parsesyslog_spark.operators import native_fast as nf
@@ -166,11 +170,6 @@ def parse_logs(
     ref = ref_now if ref_now is not None else DEFAULT_REF_NOW
     t = F.col(text_col)
     framed = F.coalesce(t.rlike(_FRAMED_RE), F.lit(False))
-    want3 = fmt in (AUTO, registry.RFC3164)
-    want5 = fmt in (AUTO, registry.RFC5424)
-    if not (want3 or want5):
-        registry.new(fmt)  # raises ParserTypeUnknown eagerly (A2)
-
     cheap = nf.cheap_guards(t)
     keep = list(df.columns)
 

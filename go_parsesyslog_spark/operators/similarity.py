@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from go_parsesyslog_spark.operators.dedup import _bucket_pairs, _lsh_buckets
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -50,6 +52,48 @@ def _norm(c):
     )
 
 
+def _cosine(vec_col: str):
+    """Pair cosine of ``vec_col`` against the query vector ``_qv``, over
+    the per-vector norms ``_cn``/``_qn`` hoisted before the join (the r5
+    form evaluated both norm aggregates per PAIR, tripling the per-pair
+    higher-order-function work, guide §1.2 step 2; the division is the
+    identical IEEE expression, so sims are bit-unchanged)."""
+    return _dot(F.col(vec_col), F.col("_qv")) / (F.col("_cn") * F.col("_qn"))
+
+
+def _rank_topk(
+    scored: DataFrame, k: int, id_col: str, query_id_col: str,
+    sim_col: str, *carry: str,
+) -> DataFrame:
+    """The ``k`` best rows per query by ``sim_col`` descending, ties to
+    the smaller id — the order the DuckDB oracles replay — as
+    (query, rank, neighbor_id, *carry, sim)."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc(sim_col), id_col)
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, "rank", F.col(id_col).alias("neighbor_id"),
+                *carry, sim_col)
+    )
+
+
+def _keyed_topk(
+    c_k: DataFrame, q_k: DataFrame, key: str, k: int,
+    id_col: str, vec_col: str, query_id_col: str,
+) -> DataFrame:
+    """Top-k over the (corpus, query) pairs that share a ``key`` value
+    (an LSH bucket or an IVF cell); a pair sharing several keys is
+    scored once."""
+    cand = (
+        c_k.join(q_k, key)
+        .filter(F.col(id_col) != F.col(query_id_col))
+        .select(id_col, vec_col, "_cn", query_id_col, "_qv", "_qn")
+        .distinct()
+    )
+    return _rank_topk(cand.withColumn("sim", _cosine(vec_col)), k, id_col,
+                      query_id_col, "sim")
+
+
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -58,29 +102,16 @@ def cosine_topk_bruteforce(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query (query side broadcast).
-
-    Per-VECTOR norms are computed once per side before the join — the
-    r5 form evaluated both norm aggregates per PAIR, tripling the
-    per-pair higher-order-function work (guide §1.2 step 2); the
-    division is the identical IEEE expression, so sims are
-    bit-unchanged."""
+    """Exact top-k cosine neighbors per query (query side broadcast;
+    per-vector norms computed once per side, see :func:`_cosine`)."""
     q = queries.select(
         F.col(query_id_col), F.col(vec_col).alias("_qv")
     ).withColumn("_qn", _norm(F.col("_qv")))
     pairs = corpus.withColumn("_cn", _norm(F.col(vec_col))).crossJoin(
         F.broadcast(q)
     ).filter(F.col(id_col) != F.col(query_id_col))
-    sim = _dot(F.col(vec_col), F.col("_qv")) / (
-        F.col("_cn") * F.col("_qn")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), id_col)
-    return (
-        pairs.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", F.col(id_col).alias("neighbor_id"), "sim")
-    )
+    return _rank_topk(pairs.withColumn("sim", _cosine(vec_col)), k, id_col,
+                      query_id_col, "sim")
 
 
 def hyperplane_planes(
@@ -147,31 +178,13 @@ def cosine_topk_lsh(
         queries.select(F.col(query_id_col), F.col(vec_col).alias("_qv")),
         dim, "_qv", n_tables, n_planes, seed,
     )
-    # per-vector norms hoisted before the bucket join (see
-    # cosine_topk_bruteforce) — identical IEEE values, 3x less
-    # per-candidate aggregate work
     c_k = c.withColumn("_cn", _norm(F.col(vec_col))).select(
         id_col, vec_col, "_cn", F.explode("lsh_keys").alias("bkey")
     )
     q_k = q.withColumn("_qn", _norm(F.col("_qv"))).select(
         query_id_col, "_qv", "_qn", F.explode("lsh_keys").alias("bkey")
     )
-    cand = (
-        c_k.join(q_k, "bkey")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(id_col, vec_col, "_cn", query_id_col, "_qv", "_qn")
-        .distinct()
-    )
-    sim = _dot(F.col(vec_col), F.col("_qv")) / (
-        F.col("_cn") * F.col("_qn")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), id_col)
-    return (
-        cand.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", F.col(id_col).alias("neighbor_id"), "sim")
-    )
+    return _keyed_topk(c_k, q_k, "bkey", k, id_col, vec_col, query_id_col)
 
 
 def train_ivf_centroids(
@@ -318,24 +331,7 @@ def cosine_topk_ivf(
         F.col(query_id_col), F.col(vec_col).alias("_qv"),
         F.explode(q_assign(F.col(vec_col))).alias("cell"),
     ).withColumn("_qn", _norm(F.col("_qv")))
-    cand = (
-        c_k.join(q_k, "cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(id_col, vec_col, "_cn", query_id_col, "_qv", "_qn")
-        .distinct()
-    )
-    # norms hoisted per vector (see cosine_topk_bruteforce) — identical
-    # IEEE division
-    sim = _dot(F.col(vec_col), F.col("_qv")) / (
-        F.col("_cn") * F.col("_qn")
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), id_col)
-    return (
-        cand.withColumn("sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", F.col(id_col).alias("neighbor_id"), "sim")
-    )
+    return _keyed_topk(c_k, q_k, "cell", k, id_col, vec_col, query_id_col)
 
 
 def embedding_near_dup_pairs_exact(
@@ -476,13 +472,7 @@ def embedding_near_dup_pairs(
     """
     sigs = hyperplane_signatures(df, dim, vec_col, n_tables, n_planes, seed)
     keyed = sigs.select(id_col, F.explode("lsh_keys").alias("bkey"))
-    buckets = (
-        keyed.groupBy("bkey")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") >= 2)
-    )
-    from go_parsesyslog_spark.operators.dedup import _bucket_pairs
-
+    buckets = _lsh_buckets(keyed, ["bkey"], id_col)
     # NO distinct here: cross-table duplicate candidates are ~1% for
     # near-orthogonal corpora (measured 3.86 M -> 3.82 M at sf1.0) while
     # the distinct itself cost a 3.8 M-row exchange; duplicates score to
@@ -616,12 +606,7 @@ def cosine_topk_quantized(
     qsim = F.col("qdot").cast("double") / F.sqrt(
         F.col("_cc").cast("double") * F.col("_qq").cast("double")
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("qsim"), id_col)
-    return (
-        pairs.withColumn("qdot", idot(F.col("qvec"), F.col("_qv")))
-        .withColumn("qsim", qsim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "rank", F.col(id_col).alias("neighbor_id"),
-                "qdot", "qsim")
-    )
+    scored = pairs.withColumn(
+        "qdot", idot(F.col("qvec"), F.col("_qv"))
+    ).withColumn("qsim", qsim)
+    return _rank_topk(scored, k, id_col, query_id_col, "qsim", "qdot")

@@ -64,12 +64,16 @@ from go_parsesyslog_spark.sources.transcripts import REF_NOW
 
 
 def plan_units(input_path: str, n_units: int) -> list[tuple[str, list[str]]]:
-    """Round-robin the input parquet files into resume units."""
+    """Round-robin the input parquet files into resume units.  An input
+    with no top-level ``*.parquet`` file raises: zero units would
+    otherwise read as a complete run of zero rows."""
     files = sorted(
         os.path.join(input_path, f)
         for f in os.listdir(input_path)
         if f.endswith(".parquet")
     )
+    if not files:
+        raise ValueError(f"no *.parquet file directly under {input_path!r}")
     n_units = max(1, min(n_units, len(files)))
     units = []
     for u in range(n_units):

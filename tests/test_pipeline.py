@@ -235,6 +235,19 @@ def test_resume_rejects_a_changed_unit_plan(spark, input_dir,
                      resume=True)
 
 
+def test_input_without_parquet_files_raises(spark, input_dir,
+                                            tmp_path_factory):
+    """An input with no top-level *.parquet file is an error, not a
+    complete run of zero rows: the fixture's parent directory holds
+    only directories."""
+    parent = os.path.dirname(input_dir)
+    out = str(tmp_path_factory.mktemp("no_input_out"))
+    with pytest.raises(ValueError, match="no \\*.parquet file") as err:
+        run_pipeline(spark, parent, out, n_units=4, n_buckets=8,
+                     resume=False)
+    assert parent in str(err.value)
+
+
 def test_hot_set_spills_and_broadcast_joins(spark, tmp_path_factory):
     """A hot set above HOT_LITERAL_CAP must spill to parquet (not
     truncate) and salt via a BroadcastHashJoin, not an isin literal

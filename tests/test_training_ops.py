@@ -80,35 +80,47 @@ def test_lsh_verify_broadcast_and_shuffle_paths_equal(
     assert bcast == shuf and len(bcast) > 0
 
 
-def test_minhash_lsh_jaccard_pairs_matches_bruteforce(spark, docs_with_dups):
+@pytest.mark.parametrize("pair_cap", [None, 2], ids=["default_cap", "cap2"])
+def test_minhash_lsh_jaccard_pairs_matches_bruteforce(
+    spark, docs_with_dups, monkeypatch, pair_cap
+):
     """The bucket-local verified-pair operator must equal {candidate
     pairs} ∩ {exact J ≥ 0.9 pairs} — computed here by brute force over
-    the same injective shingle hashes."""
+    the same injective shingle hashes — at the default bucket pair cap
+    and at a cap small enough that some bucket verifies in chain mode."""
     import numpy as np
 
+    from go_parsesyslog_spark.operators import dedup
     from go_parsesyslog_spark.operators.dedup import (
         _hash_shingles,
+        lsh_bucket_stats,
         minhash_lsh_jaccard_pairs,
         minhash_lsh_pairs,
     )
 
+    docs = docs_with_dups
+    if pair_cap is not None:
+        monkeypatch.setattr(dedup, "BUCKET_PAIR_CAP", pair_cap)
+        # a third copy of doc 5: its 3-member buckets chain, so the
+        # (5, 300005) pair is no candidate although its J is 1
+        docs = docs.unionByName(docs.filter(F.col("doc_id") == 5).select(
+            (F.col("doc_id") + 300000).alias("doc_id"), "text"))
+        biggest = lsh_bucket_stats(docs).agg(F.max("n_docs")).first()[0]
+        assert biggest > pair_cap  # chain mode really runs
     got = {
         (r["doc_a"], r["doc_b"]): (r["inter_size"], r["union_size"])
-        for r in minhash_lsh_jaccard_pairs(
-            docs_with_dups, threshold=(9, 10)
-        ).collect()
+        for r in minhash_lsh_jaccard_pairs(docs, threshold=(9, 10)).collect()
     }
-    rows = docs_with_dups.collect()
+    rows = docs.collect()
     import pandas as pd
 
     sh = dict(zip(
         [r["doc_id"] for r in rows],
-        _hash_shingles(pd.Series([r["text"] for r in rows]), 5,
-                       sentinel=False),
+        _hash_shingles(pd.Series([r["text"] for r in rows]), 5),
     ))
     cand = {
         (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(docs_with_dups).collect()
+        for r in minhash_lsh_pairs(docs).collect()
     }
     want = {}
     for a, b in cand:
@@ -214,17 +226,19 @@ def test_dedup_clusters_raises_on_nonconvergence(spark):
         dedup_clusters(docs, pairs, max_iters=1, local_edge_cap=0)
 
 
-def test_lsh_jaccard_chain_salting(spark):
+def test_lsh_jaccard_chain_salting(spark, monkeypatch):
     """VERDICT r3 #3: a chain (mega) bucket salted into bounded
     sub-groups must emit EXACTLY the same verified pair set as the
     unsalted whole-bucket evaluation — sorted-adjacent edges, each
     exactly once, including across sub-group boundaries."""
+    from go_parsesyslog_spark.operators import dedup
     from go_parsesyslog_spark.operators.dedup import (
         minhash_lsh_jaccard_pairs,
     )
 
     # 30 identical docs: every band buckets them together; cap=8 forces
     # chain mode; budget=4 forces ~8 sub-groups per bucket
+    monkeypatch.setattr(dedup, "BUCKET_PAIR_CAP", 8)
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog repeatedly")
          for i in range(30)],
@@ -233,13 +247,13 @@ def test_lsh_jaccard_chain_salting(spark):
     salted = {
         (r["doc_a"], r["doc_b"], r["inter_size"], r["union_size"])
         for r in minhash_lsh_jaccard_pairs(
-            docs, bucket_pair_cap=8, group_budget_rows=4
+            docs, group_budget_rows=4
         ).collect()
     }
     whole = {
         (r["doc_a"], r["doc_b"], r["inter_size"], r["union_size"])
         for r in minhash_lsh_jaccard_pairs(
-            docs, bucket_pair_cap=8, group_budget_rows=10**9
+            docs, group_budget_rows=10**9
         ).collect()
     }
     assert salted == whole

@@ -8,9 +8,10 @@ Usage: python tools/check_entry.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def normalize(rows, cols):
@@ -38,7 +39,9 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    spark = get_spark(master="local[8]", app_name="check_entry")
+    # no console progress bar: it would interleave with the result lines
+    spark = get_spark(master="local[8]", app_name="check_entry",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in ("region nation customer supplier part orders lineitem "
               "events documents embeddings").split():

@@ -1,7 +1,7 @@
 """Mega-bucket stress evidence: the 100 TB failure mode, reproduced.
 
 Synthesizes a template-heavy corpus (three boilerplate clusters of
-identical docs far above ``bucket_pair_cap``, plus unique filler) and
+identical docs far above ``dedup.BUCKET_PAIR_CAP``, plus unique filler) and
 drives the dedup family through the paths that only engage at scale:
 
 * ``lsh_bucket_stats`` — confirms mega buckets exist (membership ≫ cap);
