@@ -1928,8 +1928,8 @@ def _grok_projection(parsed):
 
 
 def q_grok_extract(spark, sf_dir):
-    """Generic grok template parse (operators/grok.grok_parse, arrow
-    mode — ONE compiled regex per Arrow batch, the north-star 'compiled
+    """Generic grok template parse (operators/grok.grok_parse — ONE
+    compiled regex per Arrow batch, the north-star 'compiled
     grok patterns in batched operations' form).  Each event formats a
     deterministic app log line (10% corrupted -> all-NULL + matched=
     false, the DLQ discipline); grok inverts it back to typed columns.
@@ -1941,8 +1941,7 @@ def q_grok_extract(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events")
     out = grok_parse(
-        ev.withColumn("line", _grok_demo_line()), "line",
-        _GROK_TEMPLATE, mode="arrow",
+        ev.withColumn("line", _grok_demo_line()), "line", _GROK_TEMPLATE,
     )
     return _grok_projection(out)
 

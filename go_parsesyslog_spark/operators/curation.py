@@ -32,7 +32,6 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 13,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag every training document sharing
     at least one character ``n``-gram with any benchmark/eval document
@@ -42,19 +41,16 @@ def decontaminate(
 
     Scale shape: the benchmark gram set is ``array_distinct``-ed per doc
     then globally distinct (eval sets are small — thousands of docs —
-    so it broadcasts; set ``broadcast_benchmark=False`` to let AQE pick
-    a shuffle join for an unusually large benchmark).  The corpus side
+    so it broadcasts).  The corpus side
     explodes to (id, gram) rows ONCE and the join is a narrow hash
     probe per gram; aggregation back to the doc is a map-side-combinable
     count on the id key.  No text ever crosses the shuffle — only grams
     that actually hit."""
-    bench_grams = (
+    bench_grams = F.broadcast(
         benchmark.select(
             F.explode(_char_ngrams(text_col, n)).alias("gram")
         ).distinct()
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     doc_grams = docs.select(
         F.col(id_col), F.explode(_char_ngrams(text_col, n)).alias("gram")
     )

@@ -42,6 +42,17 @@ VERIFY_BROADCAST_BYTES = 256_000_000
 # their sorted-adjacent chain edges instead of all pairs; read at call
 # time by both minhash pair operators, so they always agree.
 BUCKET_PAIR_CAP = 4096
+# Chain buckets verify in sorted windows of this many members, so one
+# mega-cluster never puts all its shingle arrays in one task.
+CHAIN_GROUP_ROWS = 4096
+# A bucket whose member × unique-shingle matrix exceeds this many cells
+# verifies pair by pair instead of by one dense matmul.
+DENSE_CELLS = 150_000_000
+# Average (id, fp, block) rows per simhash verify group.
+SIMHASH_GROUP_ROWS = 2_000_000
+# Pair graphs up to this many edges take the one-task union-find
+# instead of the distributed star loop.
+LOCAL_EDGE_CAP = 4_000_000
 
 
 def _hash_shingles(texts: pd.Series, k: int) -> list[np.ndarray]:
@@ -318,8 +329,6 @@ def minhash_lsh_jaccard_pairs(
     shingle_k: int = 5,
     seed: int = 42,
     threshold: tuple[int, int] = (9, 10),
-    dense_cells: int = 150_000_000,
-    group_budget_rows: int = 4096,
 ) -> DataFrame:
     """EXACT shingle-set Jaccard ≥ threshold over the LSH candidate
     pairs, computed BUCKET-LOCALLY — the scale-safe verify stage.
@@ -349,7 +358,7 @@ def minhash_lsh_jaccard_pairs(
          from set sizes; emit pairs passing the threshold.  Buckets
          above ``BUCKET_PAIR_CAP`` verify the sorted-adjacent chain
          edges only (exactly the pairs the candidate op emits);
-         degenerate huge-and-diverse buckets (m·S > ``dense_cells``)
+         degenerate huge-and-diverse buckets (m·S > ``DENSE_CELLS``)
          fall back to per-pair sorted-array intersection.
       5. distinct() — the same pair found in several bands collapses.
 
@@ -359,13 +368,13 @@ def minhash_lsh_jaccard_pairs(
     corpus-size-independent constant), but a CHAIN bucket is one whole
     mega-cluster: at 100 TB a boilerplate bucket of 10⁷ docs would put
     the entire cluster's arrays in a single task.  Chain buckets are
-    therefore SALTED into sub-groups of ``group_budget_rows`` members
+    therefore SALTED into sub-groups of ``CHAIN_GROUP_ROWS`` members
     along the sorted-id order, with each sub-group boundary member
     duplicated into the previous sub-group — sorted-adjacent pairs
     within sub-groups then reproduce the global chain edge set EXACTLY
     (semantics and oracle unchanged; pinned by
     tests/test_training_ops.py::test_lsh_jaccard_chain_salting), while
-    per-group residency drops to ≤ group_budget_rows + 1 arrays.
+    per-group residency drops to ≤ CHAIN_GROUP_ROWS + 1 arrays.
 
     Shingle hashes are the injective base-257 polynomial of
     ``_hash_shingles`` (no wrap at k ≤ 8), so the reported sizes are
@@ -381,7 +390,9 @@ def minhash_lsh_jaccard_pairs(
     # guide §4.1 'control how many columns cross'); localCheckpoint
     # materializes the narrow (id, sig, shingles) rows once so the two
     # consumers below (banding and the gram join) cannot re-trigger the
-    # UDF per branch.
+    # UDF per branch.  The cut is eager: cut lazily, it materialized
+    # inside a later job whose scheduler logged a `Failed to update
+    # accumulator` error per task.
     a, b = _minhash_coeffs(num_hashes, seed)
 
     def _sig_grams(texts):
@@ -407,15 +418,16 @@ def minhash_lsh_jaccard_pairs(
                   sig_grams_udf(F.col(text_col)).alias("_sg"))
         .select(F.col(id_col), F.col("_sg.signature").alias("signature"),
                 F.col("_sg.sh").alias("sh"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
-    pair_cap = BUCKET_PAIR_CAP  # the verify closure ships this value
+    # the verify closure ships these values
+    pair_cap, dense_cells = BUCKET_PAIR_CAP, DENSE_CELLS
     banded = _banded_keys(sg, id_col, num_hashes, bands)
     buckets = _lsh_buckets(banded, ["band", "band_hash"], id_col)
     # (band, band_hash, bucket-size, group, id) member rows in ONE
     # posexplode branch.  Small (all-pairs) buckets get the constant
     # group 0; chain buckets are salted into sorted windows of
-    # group_budget_rows members, the window-boundary member exploded
+    # CHAIN_GROUP_ROWS members, the window-boundary member exploded
     # into BOTH adjacent windows so every global sorted-adjacent edge
     # appears in exactly one group.  A single branch matters: the r4
     # small/large union recomputed the ENTIRE upstream (shingle UDF +
@@ -423,12 +435,12 @@ def minhash_lsh_jaccard_pairs(
     # never fired across the differing projections and the query ran
     # 2x (VERDICT r4 #3).  A conditional group-array expression keeps
     # one signature pass and one aggregation.
-    g = F.floor(F.col("pos") / group_budget_rows)
+    g = F.floor(F.col("pos") / CHAIN_GROUP_ROWS)
     grps = F.when(
         F.col("bn") <= pair_cap,
         F.array(F.lit(0).cast("long")),
     ).when(
-        (F.col("pos") % group_budget_rows == 0) & (F.col("pos") > 0),
+        (F.col("pos") % CHAIN_GROUP_ROWS == 0) & (F.col("pos") > 0),
         F.array(g - 1, g),
     ).otherwise(F.array(g))
     members = (
@@ -533,7 +545,7 @@ def minhash_lsh_jaccard_pairs(
     # below (shingle bytes ≤ 8 × text bytes: ≤ one 8-byte hash per
     # character)
     n_docs = df.count()
-    n_groups = _verify_group_count(df, bands * n_docs, group_budget_rows)
+    n_groups = _verify_group_count(df, bands * n_docs, CHAIN_GROUP_ROWS)
     vgrp = F.pmod(F.xxhash64("band", "band_hash", "grp"), F.lit(n_groups))
     # The text-bytes probe is itself a text-column scan, so it only
     # runs when the (column-pruned, cheap) doc count says the gram
@@ -706,7 +718,6 @@ def dedup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 30,
-    local_edge_cap: int = 4_000_000,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph →
     ``(doc_id, canonical_id)`` where canonical_id = min doc id of the
@@ -745,14 +756,14 @@ def dedup_clusters(
     localCheckpoint-truncated and the fixpoint probe is a 1-row
     count/hash aggregate of the edge multiset.
 
-    Pair graphs at or below ``local_edge_cap`` edges (default 4M —
+    Pair graphs at or below ``LOCAL_EDGE_CAP`` edges (4M —
     ~64 MB of id pairs, far under a task's memory budget) bypass the
     loop: one executor task runs vectorized union-find over the whole
     edge set (:func:`_cc_local_labels`), with provably identical
     labels.  The cap is checked against the exact edge count (already
     computed for the fixpoint probe), so the distributed loop remains
-    the automatic path for genuinely large near-dup graphs; pass
-    ``local_edge_cap=0`` to force it.
+    the automatic path for genuinely large near-dup graphs; set
+    ``LOCAL_EDGE_CAP = 0`` to force it.
 
     Exactly SQL-reproducible: a recursive CTE computing min reachable
     id is the DuckDB oracle (driver query ``dedup_clusters``)."""
@@ -760,7 +771,7 @@ def dedup_clusters(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)  # eager: see minhash_lsh_jaccard_pairs
     )
     prev_sig = _edge_signature(edges)
     # SMALL pair graphs (the common case even at 100 TB — the verified
@@ -769,12 +780,12 @@ def dedup_clusters(
     # stages plus a fixpoint-probe job, ~0.4-0.6 s of pure scheduling
     # per round at any data size (measured sf1.0: the loop was ~2.5 s
     # of dedup_clusters' 5.4 s on a few-thousand-edge graph).  Below
-    # ``local_edge_cap`` edges (~64 MB of (u, v) longs; the count comes
+    # ``LOCAL_EDGE_CAP`` edges (~64 MB of (u, v) longs; the count comes
     # free from the signature probe) the whole component computation
     # runs as ONE executor task (_cc_local_labels) with identical
     # output.  The star loop remains the at-scale path and stays pinned
-    # by the local_edge_cap=0 tests.
-    if prev_sig[0] <= local_edge_cap:
+    # by the LOCAL_EDGE_CAP = 0 tests.
+    if prev_sig[0] <= LOCAL_EDGE_CAP:
         labels = _cc_local_labels(edges)
     else:
         labels = _cc_star_labels(edges, prev_sig, max_iters)
@@ -867,7 +878,6 @@ def simhash(
 def simhash_near_dup_pairs(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     hamming_k: int = 3,
-    rows_per_group_budget: int = 2_000_000,
     bucket_member_cap: int | None = None,
 ) -> DataFrame:
     """Near-dup candidates with Hamming distance ≤ k via pigeonhole on
@@ -887,8 +897,8 @@ def simhash_near_dup_pairs(
     GROUP-MEMORY BOUNDS (VERDICT r3 #3):
 
     * The coarse group count scales with the corpus —
-      ``max(4 × shuffle.partitions, block-rows / rows_per_group_budget)``
-      — so AVERAGE per-group residency stays ~``rows_per_group_budget``
+      ``max(4 × shuffle.partitions, block-rows / SIMHASH_GROUP_ROWS)``
+      — so AVERAGE per-group residency stays ~``SIMHASH_GROUP_ROWS``
       narrow (id, fp, block) rows (~50 MB) at any corpus size, instead
       of growing linearly at fixed partitioning.
     * A single (block_idx, block_val) mega-bucket (identical-fingerprint
@@ -977,7 +987,7 @@ def simhash_near_dup_pairs(
 
     # group count scales with the corpus so per-group residency is
     # bounded at any scale (the count() is a metadata-cheap scan)
-    n_groups = _verify_group_count(df, 4 * df.count(), rows_per_group_budget)
+    n_groups = _verify_group_count(df, 4 * df.count(), SIMHASH_GROUP_ROWS)
     grouped = blocks.withColumn(
         "grp", F.pmod(F.xxhash64("block_idx", "block_val"), F.lit(n_groups))
     )

@@ -6,26 +6,14 @@ app-specific lines, k=v payloads, access logs).
 
 The template compiles ONCE on the driver to a single plain-parens
 regex (no named groups, so the same string runs on java.util.regex,
-Python ``re``, and DuckDB RE2 alike), then executes in one of two
-modes:
-
-* ``mode="jvm"`` (default) — per-field ``regexp_extract`` inside
-  whole-stage codegen: zero Python, zero shuffles.  Each field re-runs
-  the regex, yet measured on this host it still wins: 1.30M rows/s at
-  6 fields vs arrow's 0.93M, and 0.41 vs 0.38M rows/s even at 16
-  fields (2M/1M-row warm runs, local[8]) — java.util.regex inside
-  codegen beats the Arrow transfer cost at every width tried.
-* ``mode="arrow"`` — one vectorized pandas/Arrow batch UDF holding ONE
-  compiled ``re`` object; ``Series.str.extract`` pulls every group in
-  a single pass — the north-star "compiled grok/regex patterns in
-  batched numpy/pyarrow operations" form.  Use it when the template
-  needs Python-regex features Java lacks, or when the surrounding
-  pipeline already pays the Arrow boundary anyway.
-
-Both modes emit identical columns (differential-tested), preserve
-non-matching rows with all-NULL fields plus ``_grok_matched=false``
-(never throw — the DLQ discipline of errors.py), and keep the scan →
-project shape: no exchange, linear at any corpus size.
+Python ``re``, and DuckDB RE2 alike), then executes as one vectorized
+pandas/Arrow batch UDF holding ONE compiled ``re`` object;
+``Series.str.extract`` pulls every group in a single pass — the
+north-star "compiled grok/regex patterns in batched numpy/pyarrow
+operations" form.  Non-matching rows keep all-NULL fields plus
+``_grok_matched=false`` (never throw — the DLQ discipline of
+errors.py), and the plan keeps the scan → project shape: no exchange,
+linear at any corpus size.
 
 Built-in pattern names are original regexes for public, well-known
 token classes (integers, IPs, ISO-8601 stamps...); the registry is
@@ -42,8 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Built-in token classes.  Every group below is non-capturing — field
-# capture groups are added by the compiler, so group indices stay
-# stable and usable with regexp_extract(idx).
+# capture groups are added by the compiler, so capture group i+1 is
+# always field i.
 BUILTIN_PATTERNS: dict[str, str] = {
     "INT": r"[+-]?\d+",
     "NONNEGINT": r"\d+",
@@ -181,41 +169,10 @@ def grok_parse(
     text_col: str,
     template: str,
     extra_patterns: dict[str, str] | None = None,
-    mode: str = "jvm",
 ) -> DataFrame:
     """Append one typed column per grok field plus ``_grok_matched``.
     Non-matching rows keep all fields NULL (DLQ-friendly, never
-    throws).  See module docstring for the jvm/arrow mode trade."""
-    regex, fields = grok_compile(template, extra_patterns)
-    if mode == "jvm":
-        # NULL text => false (not NULL), matching arrow mode
-        matched = F.coalesce(F.col(text_col).rlike(regex), F.lit(False))
-        out = df
-        for i, (field, cast) in enumerate(fields):
-            col = F.when(
-                matched,
-                F.nullif(F.regexp_extract(F.col(text_col), regex, i + 1),
-                         F.lit("")),
-            )
-            # DATA/GREEDYDATA may legitimately capture "": refine the
-            # nullif only for casts where "" is un-castable anyway
-            if cast is None:
-                col = F.when(matched,
-                             F.regexp_extract(F.col(text_col), regex, i + 1))
-            else:
-                col = col.try_cast(cast)
-            out = out.withColumn(field, col)
-        return out.withColumn("_grok_matched", matched)
-    if mode == "arrow":
-        return _grok_parse_arrow(df, text_col, regex, fields)
-    raise ValueError(f"unknown grok mode {mode!r}")
-
-
-def _grok_parse_arrow(
-    df: DataFrame, text_col: str, regex: str,
-    fields: list[tuple[str, str | None]],
-) -> DataFrame:
-    """One compiled re per UDF (pickled into the closure — NOT
+    throws).  One compiled re per UDF (pickled into the closure — NOT
     recompiled per batch, which would lean on the re module's evictable
     512-entry cache), one extraction pass per Arrow batch."""
     import warnings
@@ -223,6 +180,7 @@ def _grok_parse_arrow(
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    regex, fields = grok_compile(template, extra_patterns)
     names = [f for f, _ in fields]
     schema = ", ".join(f"`{n}` string" for n in names) + ", `_m` boolean"
     rx = re.compile(regex)
@@ -233,13 +191,13 @@ def _grok_parse_arrow(
         # matched must come from a search, not from group participation:
         # a template whose literal text makes a field optional or
         # alternated ("a%{INT:n}?" / "a%{INT:n}|b") can match with every
-        # group NaN, and jvm mode's rlike reports those rows as matched
+        # group NaN
         with warnings.catch_warnings():
             # pandas warns that the pattern has groups; intentional here
             warnings.simplefilter("ignore", UserWarning)
             m = s.str.contains(rx, regex=True).fillna(False).astype(bool)
-        # jvm parity for uncast string fields: regexp_extract yields ""
-        # (not NULL) for a matched row whose group didn't participate
+        # a matched row whose uncast string group didn't participate
+        # yields "" (not NULL), like SQL regexp_extract
         groups.loc[m] = groups.loc[m].fillna("")
         groups["_m"] = m
         return groups

@@ -16,18 +16,20 @@ re-measured for this shape.
 Performance shape (this matters — naive Catalyst regex use re-executes
 the pattern once per extracted field):
 
-* the branch FILTER is ONE ``rlike`` — every bound that would need
-  arithmetic is baked into the pattern itself (PRI range as an
-  alternation, the 32-byte tag window as a Java lookahead, "content
-  glued to SD without a space" excluded by an optional-tail group) —
-  and the framing gate (``^\\d+ `` vs not) runs first, so each row
-  evaluates at most ONE format's pattern;
-* the groups are materialized ONCE per matching row: an anchored
-  ``regexp_replace`` rewrites the line into its capture groups joined
-  by \\x01 and split once, in a dedicated Project below the field
-  projection (CollapseProject keeps expensive multi-referenced
-  expressions materialized), and all fields are cheap
-  ``try_element_at``/``length`` ops over the split array;
+* ONE regex pass per row both decides and extracts: an anchored
+  ``regexp_replace`` rewrites a matching line into its capture groups
+  joined by \\x01 (a non-matching line comes back unchanged), split
+  once in a dedicated Project below the field projection
+  (CollapseProject keeps expensive multi-referenced expressions
+  materialized).  Every bound that would need arithmetic is baked into
+  the pattern itself (PRI range as an alternation, the 32-byte tag
+  window as a Java lookahead, "content glued to SD without a space"
+  excluded by an optional-tail group), so the group count IS the match
+  test: ``matched_3164`` / ``matched_5424``, the one definition
+  ``parse_logs`` and the ``native_*_mask`` helpers share.  The framing
+  gate (``^\\d+ `` vs not) runs first, so each row evaluates at most
+  ONE format's pattern, and every field is a cheap
+  ``try_element_at``/``length`` op over the split array;
 * every field expression is TOTAL (``try_element_at`` / ``try_cast`` /
   ``try_to_timestamp``): Catalyst is free to push user predicates over
   parsed columns below our projections and evaluate them on any row —
@@ -100,8 +102,6 @@ NATIVE_5424_RE = (
 _N5 = 10
 _TPL5 = SEP.join(f"${i}" for i in range(1, _N5 + 1))
 
-N3, N5 = _N3, _N5  # public group arities (size(groups)==N ⟺ pattern matched)
-
 _MONTHS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
            "Jul", "Aug", "Sep", "Oct", "Nov", "Dec"]
 
@@ -122,35 +122,41 @@ def cheap_guards(text: Column) -> Column:
     )
 
 
-def ts_shape_ok(text: Column) -> Column:
-    """Timestamp probe for shape-valid 5424 headers: NILVALUE or a
-    calendar-valid RFC3339 instant.  Every sub-expression is TOTAL
-    (try_element_at / try_to_timestamp) so Catalyst may evaluate it on
-    any row in any order without ANSI crashes — rows whose timestamp is
-    shape-valid but calendar-invalid (month 13 …) go to Python, which
-    emits invalid_timestamp with the right partial fields."""
-    tok = F.try_element_at(F.split(text, " ", 4), F.lit(3))
-    return (tok == "-") | F.try_to_timestamp(tok).isNotNull()
+def matched_3164(g: Column) -> Column:
+    """The 3164 match test over a group array from ``split_groups``: the
+    anchored rewrite of SEP-free text yields exactly ``_N3`` groups iff
+    the pattern matched (the unchanged line splits into one)."""
+    return F.size(g) == _N3
 
 
-def ts_ok_groups_5424(g: Column) -> Column:
-    """Same timestamp probe, but over the already-materialized group
-    array (group 3 = TIMESTAMP) — avoids re-splitting the raw text."""
+def matched_5424(g: Column) -> Column:
+    """The 5424 match test over a group array: ``_N5`` groups and a
+    timestamp (group 3) that is NILVALUE or a calendar-valid RFC3339
+    instant.  Every sub-expression is TOTAL (try_element_at /
+    try_to_timestamp) so Catalyst may evaluate it on any row in any
+    order without ANSI crashes — rows whose timestamp is shape-valid
+    but calendar-invalid (month 13 …) go to Python, which emits
+    invalid_timestamp with the right partial fields."""
     tok = F.try_element_at(g, F.lit(3))
-    return (tok == "-") | F.try_to_timestamp(tok).isNotNull()
+    return (F.size(g) == _N5) & (
+        (tok == "-") | F.try_to_timestamp(tok).isNotNull()
+    )
 
 
 def native_3164_mask(text: Column) -> Column:
-    """ONE regex per row: every validity bound is inside the pattern."""
+    """Whether ``parse_logs`` parses this RFC3164 line natively: the
+    same guards, rewrite and match test it applies."""
     return F.coalesce(
-        cheap_guards(text) & text.rlike(NATIVE_3164_RE), F.lit(False)
+        cheap_guards(text) & matched_3164(split_groups(groups_str_3164(text))),
+        F.lit(False),
     )
 
 
 def native_5424_mask(text: Column) -> Column:
-    """ONE regex + one split + one timestamp probe per row, all total."""
+    """Whether ``parse_logs`` parses this RFC5424 frame natively: the
+    same guards, rewrite and match test it applies."""
     return F.coalesce(
-        cheap_guards(text) & text.rlike(NATIVE_5424_RE) & ts_shape_ok(text),
+        cheap_guards(text) & matched_5424(split_groups(groups_str_5424(text))),
         F.lit(False),
     )
 

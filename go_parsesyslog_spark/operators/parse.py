@@ -1,14 +1,15 @@
 """The parse operator: DataFrame in, DataFrame + parsed LogMsg columns out.
 
 This is the Spark equivalent of the reference's whole ``Parser``
-interface (parsesyslog.go:23-26).  Both engines are ONE narrow,
-shuffle-free projection over the ``text`` column.  The Arrow engine
-runs an Arrow-batched pandas UDF returning a struct on every row; the
-default native engine runs the group regex once per row, parses the
-canonical rows JVM-side, and hands the exact UDF only the others (the
+interface (parsesyslog.go:23-26).  Both engines are the SAME narrow,
+shuffle-free projection over the ``text`` column.  The default native
+engine runs the group regex once per row, parses the canonical rows
+JVM-side, and hands the Arrow-batched exact UDF only the others (the
 canonical rows cross the Arrow boundary as NULLs), picking each output
-column per row.  No state crosses rows, partitions, or batches — at
-100 TB both engines parallelize embarrassingly.
+column per row.  The Arrow engine is that projection with no native
+rows: the exact UDF parses every row.  No state crosses rows,
+partitions, or batches — at 100 TB both engines parallelize
+embarrassingly.
 
 Format dispatch happens *inside* the UDF per Arrow batch (a vectorized
 mask split), so mixed-format tables are parsed in a single pass — using
@@ -24,7 +25,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from go_parsesyslog_spark.operators import native_fast as nf
 from go_parsesyslog_spark.operators import registry
+from go_parsesyslog_spark.operators.parse_rfc3164 import DEFAULT_REF_NOW
 from go_parsesyslog_spark.operators.schema import PARSED_COLUMNS, PARSED_STRUCT
 
 AUTO = "auto"
@@ -103,12 +106,6 @@ def _batch_parser(fmt: str, ref_now: pd.Timestamp | None):
     return fn
 
 
-def make_parse_udf(fmt: str = AUTO, ref_now: pd.Timestamp | None = None):
-    """Build the Arrow-batched parse UDF for a format ('rfc3164',
-    'rfc5424', or 'auto')."""
-    return F.pandas_udf(_batch_parser(fmt, ref_now), PARSED_WITH_FORMAT)
-
-
 def make_fallback_udf(fmt: str = AUTO, ref_now: pd.Timestamp | None = None):
     """The exact parser over ``(text, fast)``: rows with ``fast`` true
     were parsed JVM-side and come back with every field NULL (their
@@ -123,20 +120,6 @@ def make_fallback_udf(fmt: str = AUTO, ref_now: pd.Timestamp | None = None):
         return _scrub_object_nans(out.reindex(pd.RangeIndex(len(texts))))
 
     return F.pandas_udf(fn, PARSED_WITH_FORMAT)
-
-
-def parse_logs_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    fmt: str = AUTO,
-    ref_now: pd.Timestamp | None = None,
-) -> DataFrame:
-    """The Arrow-batched Python engine over every row — exact reference
-    semantics for arbitrary input, one narrow projection."""
-    udf = make_parse_udf(fmt, ref_now)
-    parsed = df.withColumn("_parsed", udf(F.col(text_col)))
-    keep = [c for c in df.columns]
-    return parsed.select(*keep, "_parsed.format", *[f"_parsed.{c}" for c in PARSED_COLUMNS])
 
 
 def parse_logs(
@@ -155,18 +138,12 @@ def parse_logs(
     entirely JVM-side (whole-stage codegen — see operators/native_fast
     for why this matters at high core counts); everything else takes the
     Arrow-batched exact Python parser, in the same narrow projection.
-    ``engine="arrow"`` forces the Python engine for all rows; so does a
-    format registered through :func:`registry.register`, which has no
-    native counterpart.
+    ``engine="arrow"`` is that same projection with no native rows: the
+    exact parser takes every row.  So does a format registered through
+    :func:`registry.register`, which has no native counterpart.
     """
-    want3 = fmt in (AUTO, registry.RFC3164)
-    want5 = fmt in (AUTO, registry.RFC5424)
-    if engine != "native" or not (want3 or want5):
-        return parse_logs_arrow(df, text_col, fmt, ref_now)
-
-    from go_parsesyslog_spark.operators import native_fast as nf
-    from go_parsesyslog_spark.operators.parse_rfc3164 import DEFAULT_REF_NOW
-
+    want3 = engine == "native" and fmt in (AUTO, registry.RFC3164)
+    want5 = engine == "native" and fmt in (AUTO, registry.RFC5424)
     ref = ref_now if ref_now is not None else DEFAULT_REF_NOW
     t = F.col(text_col)
     framed = F.coalesce(t.rlike(_FRAMED_RE), F.lit(False))
@@ -176,11 +153,12 @@ def parse_logs(
     # ---- the group-array Project: ONE regex pass per row.  The anchored
     # regexp_replace rewrite either matches (→ exactly N groups joined by
     # SEP; input is SEP-free by cheap_guards) or returns the input
-    # unchanged (→ size 1), so `size(groups) == N` IS the match test —
-    # no separate rlike anywhere.  The split happens in the same Project
-    # (split is cheap; the regex is what must not re-run); CollapseProject
-    # keeps the array materialized because it is non-cheap and referenced
-    # once per output column by the consumer Project.
+    # unchanged (→ size 1), so the group count IS the match test
+    # (nf.matched_*) — no separate rlike anywhere.  The split happens in
+    # the same Project (split is cheap; the regex is what must not
+    # re-run); CollapseProject keeps the array materialized because it is
+    # non-cheap and referenced once per output column by the consumer
+    # Project.
     #
     # The `~isnan(rand)` conjunct is ALWAYS TRUE but nondeterministic-
     # tagged: Catalyst's PushPredicateThroughNonJoin only pushes filters
@@ -210,17 +188,16 @@ def parse_logs(
     # Under AUTO the framing gates make the two matches exclusive, so the
     # 3164 match doubles as the per-row format discriminator — no second
     # framing rlike per output column.
-    m3 = F.coalesce(F.size("_g3") == nf.N3, F.lit(False)) if want3 else F.lit(False)
-    m5 = (
-        F.coalesce(
-            (F.size("_g5") == nf.N5) & nf.ts_ok_groups_5424(F.col("_g5")),
-            F.lit(False),
+    fast = F.lit(False)
+    if want3 or want5:
+        m3 = (F.coalesce(nf.matched_3164(F.col("_g3")), F.lit(False))
+              if want3 else F.lit(False))
+        m5 = (F.coalesce(nf.matched_5424(F.col("_g5")), F.lit(False))
+              if want5 else F.lit(False))
+        staged = staged.withColumn("_m3", m3).withColumn(
+            "_fast", F.col("_m3") | m5
         )
-        if want5
-        else F.lit(False)
-    )
-    staged = staged.withColumn("_m3", m3).withColumn("_fast", F.col("_m3") | m5)
-    fast = F.col("_fast")
+        fast = F.col("_fast")
 
     # ---- the exact Python parser, in the SAME narrow projection: it
     # receives every row but only the non-canonical ones carry their text
@@ -241,7 +218,9 @@ def parse_logs(
     def native(name: str) -> Column:
         if want3 and want5:
             return F.when(F.col("_m3"), f3[name]).otherwise(f5[name])
-        return (f3 if want3 else f5)[name]
+        if want3 or want5:
+            return (f3 if want3 else f5)[name]
+        return F.lit(None)  # never taken: `fast` is false on every row
 
     return staged.select(
         *keep,

@@ -32,7 +32,6 @@ def read_syslog(
     path: str,
     fmt: str = "auto",
     framing: str = "lines",
-    engine: str = "native",
     with_source_file: bool = True,
     ref_now=None,
 ) -> DataFrame:
@@ -48,7 +47,7 @@ def read_syslog(
             raw = raw.withColumn("source_file", F.input_file_name())
         # empty trailing lines are file artifacts, not messages
         raw = raw.filter(F.length("text") > 0)
-        return parse_logs(raw, fmt=fmt, engine=engine, ref_now=ref_now)
+        return parse_logs(raw, fmt=fmt, ref_now=ref_now)
     if framing in ("auto", "octet", "newline"):
         raw = spark.read.text(path, wholetext=True).withColumnRenamed(
             "value", "blob"
@@ -60,5 +59,5 @@ def read_syslog(
         ]
         msgs = split_messages(raw, blob_col="blob", fmt=split_fmt)
         msgs = msgs.withColumnRenamed("blob", "text")
-        return parse_logs(msgs, fmt=fmt, engine=engine, ref_now=ref_now)
+        return parse_logs(msgs, fmt=fmt, ref_now=ref_now)
     raise ValueError(f"unknown framing {framing!r}")

@@ -611,9 +611,9 @@ def availablenow_grok_extract(
 ) -> DataFrame:
     """Grok under Structured Streaming: the caller-supplied
     ``line_expr`` Column synthesizes the text inside the stream, then
-    the compiled-template Arrow UDF (operators/grok.grok_parse,
-    mode="arrow") extracts typed fields inside the microbatch — a
-    stateless streaming projection: append mode, NO state store, no
+    the compiled-template Arrow UDF (operators/grok.grok_parse)
+    extracts typed fields inside the microbatch — a stateless
+    streaming projection: append mode, NO state store, no
     watermark, so every input row flows straight through the one
     availableNow batch.  This is the gate evidence that the grok
     operator composes with readStream unchanged (same DataFrame code
@@ -630,9 +630,7 @@ def availablenow_grok_extract(
     # as the batch-side `_t` reader).
     par = spark.sparkContext.defaultParallelism
     src = src.repartition(par, F.col(columns[0]))
-    parsed = grok_parse(
-        src.withColumn("line", line_expr), "line", template, mode="arrow"
-    )
+    parsed = grok_parse(src.withColumn("line", line_expr), "line", template)
     # Row-per-input output: at driver scale (10^6 wide rows) the
     # memory sink's single-threaded driver ingest dominates (measured
     # 6.3 s → 1.9 s with the parquet gate sink at 1M input rows), while

@@ -1,7 +1,7 @@
 """Grok template compiler + parser (operators/grok.py).  Driver-gate
 parity lives in __spark_entry__ (grok_extract, regex-free oracle);
-these tests pin the compiler grammar, both execution modes, their
-differential equality, and the zero-exchange plan shape."""
+these tests pin the compiler grammar, the Arrow extraction, and the
+zero-exchange plan shape."""
 
 import pytest
 import pyspark.sql.functions as F
@@ -96,13 +96,11 @@ def test_builtins_have_no_capture_groups():
 # ---------------------------------------------------------------- parse
 
 
-@pytest.mark.parametrize("mode", ["jvm", "arrow"])
-def test_parse_typed_fields_and_dlq(spark, mode):
+def test_parse_typed_fields_and_dlq(spark):
     out = {
         r["id"]: (r["pri"], r["host"], r["pid"], r["action"],
                   r["latency_ms"], r["_grok_matched"])
-        for r in grok_parse(_df(spark), "text", TEMPLATE,
-                            mode=mode).collect()
+        for r in grok_parse(_df(spark), "text", TEMPLATE).collect()
     }
     assert out[1] == (34, "host-01", 123, "click", 250, True)
     assert out[2] == (0, "h", 0, "a", 0, True)
@@ -112,18 +110,6 @@ def test_parse_typed_fields_and_dlq(spark, mode):
     # never a throw
     for i in (4, 5, 6):
         assert out[i] == (None, None, None, None, None, False)
-
-
-def test_modes_are_differentially_equal(spark):
-    a = sorted(
-        tuple(r) for r in grok_parse(_df(spark), "text", TEMPLATE,
-                                     mode="jvm").collect()
-    )
-    b = sorted(
-        tuple(r) for r in grok_parse(_df(spark), "text", TEMPLATE,
-                                     mode="arrow").collect()
-    )
-    assert a == b
 
 
 def test_loglevel_and_iso8601_tokens(spark):
@@ -139,20 +125,13 @@ def test_loglevel_and_iso8601_tokens(spark):
     assert out[2] == ("2025-10-21 15:30:00.123+02:00", "ERROR", "boom")
 
 
-@pytest.mark.parametrize("mode", ["jvm", "arrow"])
-def test_parse_plan_has_no_exchange(spark, mode):
+def test_parse_plan_has_no_exchange(spark):
     plan = (
-        grok_parse(_df(spark), "text", TEMPLATE, mode=mode)
+        grok_parse(_df(spark), "text", TEMPLATE)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan, plan
-    if mode == "arrow":
-        assert "ArrowEvalPython" in plan, plan
-
-
-def test_bad_mode_raises(spark):
-    with pytest.raises(ValueError, match="unknown grok mode"):
-        grok_parse(_df(spark), "text", TEMPLATE, mode="rdd")
+    assert "ArrowEvalPython" in plan, plan
 
 
 # ------------------------------------------------------- property tests
@@ -228,12 +207,9 @@ def test_smuggled_capture_groups_fail_loudly():
     (r"a%{INT:n:int}?", "ab"),        # optional field group
     (r"%{INT:n:int}|b", "b"),         # field on one alternation arm
 ])
-def test_nonparticipating_group_modes_agree(spark, template, line):
-    """A row can match while a field group doesn't participate; both
-    modes must report matched=true with a NULL typed field."""
+def test_nonparticipating_group_matches(spark, template, line):
+    """A row can match while a field group doesn't participate: it
+    reports matched=true with a NULL typed field."""
     df = spark.createDataFrame([(1, line)], "id long, text string")
-    rows = {}
-    for mode in ("jvm", "arrow"):
-        r = grok_parse(df, "text", template, mode=mode).collect()[0]
-        rows[mode] = (r["n"], r["_grok_matched"])
-    assert rows["jvm"] == rows["arrow"] == (None, True)
+    r = grok_parse(df, "text", template).collect()[0]
+    assert (r["n"], r["_grok_matched"]) == (None, True)

@@ -12,7 +12,7 @@ from go_parsesyslog_spark.corpus import (
     RFC5424_INVALID,
     RFC5424_VALID,
 )
-from go_parsesyslog_spark.operators.parse import parse_logs, parse_logs_arrow
+from go_parsesyslog_spark.operators.parse import parse_logs
 from go_parsesyslog_spark.operators.parse_rfc3164 import DEFAULT_REF_NOW
 from go_parsesyslog_spark.sources.transcripts import generate_transcripts
 
@@ -174,6 +174,7 @@ def test_native_parse_single_scan(spark, tmp_path):
     assert final.count("regexp_replace") <= 2, final.count("regexp_replace")
 
 
+
 CANONICAL_3164 = "<34>Oct 11 22:14:15 mymachine su[230]: 'su root' failed\n"
 CANONICAL_5424 = (
     "<165>1 2024-01-02T03:04:05Z host app proc mid [ex@1 k=\"v\"] hello\n"
@@ -198,3 +199,17 @@ def test_native_degenerate_input_matches_exact(spark, fmt):
     row = canon.select(native_3164_mask(F.col("a")).alias("a"),
                        native_5424_mask(F.col("b")).alias("b")).first()
     assert row["a"] and row["b"]
+
+
+def test_arrow_engine_runs_no_native_parse(spark):
+    """The Arrow engine is the native projection with no native rows:
+    one Arrow Python node and no group regex left in the plan."""
+    df = spark.createDataFrame(
+        [(CANONICAL_3164,), ("garbage",)], "text string"
+    )
+    parsed = parse_logs(df, fmt="auto", engine="arrow")
+    parsed.collect()
+    plan = parsed._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "regexp_replace" not in plan, plan
+

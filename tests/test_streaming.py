@@ -412,7 +412,7 @@ def test_availablenow_grok_extract_matches_batch(spark, sf_dir):
     streamed = availablenow_grok_extract(spark, path, cols, line, template)
     batch = grok_parse(
         spark.read.parquet(path).select(*cols).withColumn("line", line),
-        "line", template, mode="arrow",
+        "line", template,
     )
     s = sorted((r["event_id"], r["k"], r["t"], r["_grok_matched"])
                for r in streamed.collect())

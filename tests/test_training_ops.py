@@ -150,7 +150,7 @@ def test_dedup_clusters_transitive(spark):
     assert got == {0: 0, 1: 1, 3: 1, 5: 1, 2: 2, 6: 2, 4: 4}
 
 
-def test_dedup_clusters_path_graph_converges(spark):
+def test_dedup_clusters_path_graph_converges(spark, monkeypatch):
     """VERDICT r3 #1: the mega-bucket chain fallback feeds the
     clustering PATH graphs with diameter = bucket size.  With pointer
     doubling, a 4096-node path (diameter 4095 ≫ the 30-round budget of
@@ -158,6 +158,7 @@ def test_dedup_clusters_path_graph_converges(spark):
     ``max_iters=30`` and label every node with the component min."""
     import random
 
+    from go_parsesyslog_spark.operators import dedup
     from go_parsesyslog_spark.operators.dedup import dedup_clusters
 
     n = 4096
@@ -171,19 +172,21 @@ def test_dedup_clusters_path_graph_converges(spark):
         [(min(a, b), max(a, b)) for a, b in zip(perm, perm[1:])],
         "doc_a long, doc_b long",
     )
-    # local_edge_cap=0 forces the distributed star loop — the at-scale
+    # LOCAL_EDGE_CAP = 0 forces the distributed star loop — the at-scale
     # path this test exists to pin (the default would take the local
     # union-find fallback for a 4k-edge graph)
-    got = dedup_clusters(docs, pairs, local_edge_cap=0)
+    monkeypatch.setattr(dedup, "LOCAL_EDGE_CAP", 0)
+    got = dedup_clusters(docs, pairs)
     assert got.filter(F.col("canonical_id") != 0).count() == 0
     assert got.count() == n
 
 
-def test_dedup_clusters_local_matches_distributed(spark):
+def test_dedup_clusters_local_matches_distributed(spark, monkeypatch):
     """The small-graph union-find fallback must label EXACTLY like the
     distributed star loop: same path graph, both paths, equal output."""
     import random
 
+    from go_parsesyslog_spark.operators import dedup
     from go_parsesyslog_spark.operators.dedup import dedup_clusters
 
     n = 512
@@ -202,17 +205,19 @@ def test_dedup_clusters_local_matches_distributed(spark):
         (r["doc_id"], r["canonical_id"])
         for r in dedup_clusters(docs, pairs).collect()
     }
+    monkeypatch.setattr(dedup, "LOCAL_EDGE_CAP", 0)
     dist = {
         (r["doc_id"], r["canonical_id"])
-        for r in dedup_clusters(docs, pairs, local_edge_cap=0).collect()
+        for r in dedup_clusters(docs, pairs).collect()
     }
     assert local == dist
     assert len(local) == n + 8
 
 
-def test_dedup_clusters_raises_on_nonconvergence(spark):
+def test_dedup_clusters_raises_on_nonconvergence(spark, monkeypatch):
     """Non-convergence must RAISE, never silently return partial (i.e.
     wrong) canonical ids."""
+    from go_parsesyslog_spark.operators import dedup
     from go_parsesyslog_spark.operators.dedup import dedup_clusters
 
     n = 64
@@ -222,8 +227,9 @@ def test_dedup_clusters_raises_on_nonconvergence(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
+    monkeypatch.setattr(dedup, "LOCAL_EDGE_CAP", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(docs, pairs, max_iters=1, local_edge_cap=0)
+        dedup_clusters(docs, pairs, max_iters=1)
 
 
 def test_lsh_jaccard_chain_salting(spark, monkeypatch):
@@ -237,24 +243,22 @@ def test_lsh_jaccard_chain_salting(spark, monkeypatch):
     )
 
     # 30 identical docs: every band buckets them together; cap=8 forces
-    # chain mode; budget=4 forces ~8 sub-groups per bucket
+    # chain mode; 4-member windows force ~8 sub-groups per bucket
     monkeypatch.setattr(dedup, "BUCKET_PAIR_CAP", 8)
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog repeatedly")
          for i in range(30)],
         "doc_id long, text string",
     )
+    monkeypatch.setattr(dedup, "CHAIN_GROUP_ROWS", 4)
     salted = {
         (r["doc_a"], r["doc_b"], r["inter_size"], r["union_size"])
-        for r in minhash_lsh_jaccard_pairs(
-            docs, group_budget_rows=4
-        ).collect()
+        for r in minhash_lsh_jaccard_pairs(docs).collect()
     }
+    monkeypatch.setattr(dedup, "CHAIN_GROUP_ROWS", 10**9)
     whole = {
         (r["doc_a"], r["doc_b"], r["inter_size"], r["union_size"])
-        for r in minhash_lsh_jaccard_pairs(
-            docs, group_budget_rows=10**9
-        ).collect()
+        for r in minhash_lsh_jaccard_pairs(docs).collect()
     }
     assert salted == whole
     # identical docs → the full sorted chain, Jaccard 1 everywhere

@@ -6,7 +6,7 @@ drives the dedup family through the paths that only engage at scale:
 
 * ``lsh_bucket_stats`` — confirms mega buckets exist (membership ≫ cap);
 * ``minhash_lsh_jaccard_pairs`` — chain fallback + salted sub-groups
-  (per-group residency ≤ group_budget_rows arrays, VERDICT r3 #3);
+  (per-group residency ≤ CHAIN_GROUP_ROWS arrays, VERDICT r3 #3);
 * ``dedup_clusters`` — star alternation over the resulting path graphs
   (diameter = cluster size, the case that silently broke r3's
   min-label propagation at max_iters=30);
