@@ -1,9 +1,9 @@
 """End-to-end parse → enrich → route → aggregate pipeline.
 
 The Spark re-expression of the reference's whole purpose (SURVEY.md §2
-Table B): one declarative DAG per work unit —
+Table B): one declarative DAG per batch of work units —
 
-    scan(unit files)                       # columnar, pruned
+    scan(batch files)                      # columnar, pruned
       → parse_logs        (one narrow projection: native JVM parse,
                            Arrow-batched exact UDF for the rest)
       → enrich            (literal-map lookups — no join)
@@ -11,21 +11,23 @@ Table B): one declarative DAG per work unit —
       → ONE fan-out partitioned write      (the only full shuffle)
 
 then, once per run, ONE windowed metrics aggregation over every
-committed unit's sink (column-pruned readback).
+committed batch's sink (column-pruned readback).
 
-Work units are groups of input files: the unit is the resume/commit
-granule (plans/lineage.py).  Per unit the input is scanned exactly once
-and scan through route is ONE narrow stage feeding the fan-out shuffle;
-the unit's only Spark work is its write.  Units run concurrently on the
-scheduler (independent jobs), so per-job fixed latency overlaps instead
-of accumulating.
+Work units are groups of input files: the unit is the resume granule
+(plans/lineage.py).  The pending units run in batches, one after
+another; a batch is the units a run keeps in flight, and its input is
+scanned exactly once by ONE write job into ONE commit directory, with
+scan through route ONE narrow stage feeding the fan-out shuffle.  A
+batch commits all-or-nothing, so a sink file holds a cell's rows of a
+whole batch: files per run are batches × cells, not units × cells.
 
 Scale design notes (100 TB / 1000 executors):
 * no pass over the input precedes the units: hot-conversation skew is
   handled by the write's rebalance (below), from measured sizes, so
   every sink row has ``salt = 0``;
 * unit size bounds the blast radius of a failure — a killed run loses
-  at most the in-flight units; the marker rename is atomic;
+  at most the in-flight units (one batch); each marker rename is
+  atomic, and a batch counts only once all its markers are in;
 * the fan-out shuffle is a rebalance keyed (sink_sev, sink_key) with no
   width of its own: it starts at ``spark.sql.shuffle.partitions``, and
   AQE coalesces small reduce partitions and splits one larger than
@@ -33,7 +35,7 @@ Scale design notes (100 TB / 1000 executors):
   map output, so a hot cell spreads over several writer tasks with no
   size estimate up front;
 * metrics and the summary's row counts come from one aggregation over
-  the committed sinks, run after the units (metric rows are
+  the committed sinks, run after the batches (metric rows are
   O(sinks × windows), thousands of times smaller than the data).  A
   conversation's distinct-count estimate therefore covers every unit,
   and a resumed run re-aggregates all committed units.
@@ -43,7 +45,6 @@ from __future__ import annotations
 
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
 import pandas as pd
@@ -84,6 +85,9 @@ def plan_units(input_path: str, n_units: int) -> list[tuple[str, list[str]]]:
 
 
 def _write_pandas_parquet(pdf: pd.DataFrame, out_dir: str) -> None:
+    """Write ``part-00000.parquet`` atomically: a temporary name in the
+    same directory (dot-prefixed, so readers skip it), then a rename, so
+    a killed write never leaves a truncated file that looks finished."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -91,20 +95,25 @@ def _write_pandas_parquet(pdf: pd.DataFrame, out_dir: str) -> None:
     for c in pdf.columns:
         if str(pdf[c].dtype).startswith("datetime64[ns"):
             pdf[c] = pdf[c].astype("datetime64[us]")
-    pq.write_table(
-        pa.Table.from_pandas(pdf, preserve_index=False),
-        os.path.join(out_dir, "part-00000.parquet"),
-    )
+    final = os.path.join(out_dir, "part-00000.parquet")
+    tmp = os.path.join(out_dir, ".part-00000.parquet.tmp")
+    try:
+        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), tmp)
+        os.replace(tmp, final)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
-def _process_unit(
+def sink_frame(
     spark: SparkSession,
     files: list[str],
-    unit_out: str,
     fmt: str,
     ref_now,
     n_buckets: int,
-) -> None:
+) -> DataFrame:
+    """The fan-out write's input over ``files``: scan → parse → enrich →
+    route, rebalanced on the sink cell."""
     df = spark.read.parquet(*files)
     parsed = parse_logs(df, text_col="text", fmt=fmt, ref_now=ref_now)
     enriched = enrich(parsed, spark)
@@ -115,10 +124,6 @@ def _process_unit(
     final = routed.withColumn(
         "text", F.when(F.col("err_code").isNotNull(), F.col("text"))
     )
-    # The only pass over the input.  Iceberg when the
-    # runtime jar is present, partitioned parquet otherwise (probe +
-    # logged fallback — sources/tableformat.py).
-    #
     # The shuffle key decides how many writer tasks (= output files) a
     # (sink_sev, sink_key) cell spans: one, unless AQE sees a reduce
     # partition above spark.sql.adaptive.advisoryPartitionSizeInBytes
@@ -128,8 +133,7 @@ def _process_unit(
     # whole reduce partitions, so the cold cells hashed into the same
     # partition are split with it; a smaller advisory size trades more
     # files for less skew.
-    shuffled = final.hint("rebalance", "sink_sev", "sink_key")
-    write_partitioned(shuffled, unit_out, ["sink_sev", "sink_key"])
+    return final.hint("rebalance", "sink_sev", "sink_key")
 
 
 def run_pipeline(
@@ -146,11 +150,18 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the full pipeline.  Returns a summary dict.
 
+    The pending units run in batches of ``max(2, cores // 2)`` (fewer
+    when fewer are pending), one batch after another.  Each batch is
+    one write job into ``sinks/batch=<first unit id>/`` and commits
+    all-or-nothing (plans/lineage.py); ``units_run`` and
+    ``units_skipped`` still list unit ids.
+
     ``max_units`` limits how many *pending* units are processed this
     call — used by tests to simulate a killed run.  A resume whose unit
     plan differs from the committed markers' (other input files or
     ``n_units``) raises ``ValueError``: skipping a unit id that now
-    names other files would drop or double-count rows.
+    names other files would drop or double-count rows.  A resume first
+    deletes what an uncommitted batch left behind.
 
     ``salt_buckets`` is accepted and ignored: the pipeline computes no
     hot set, so every sink row has ``salt = 0`` (the write's AQE
@@ -169,49 +180,49 @@ def run_pipeline(
                 "this run plans for it (changed input or n_units); "
                 "rerun with resume=False"
             )
-    if not resume:
+    if resume:
+        lineage.clean_uncommitted(out_root)
+    elif os.path.isdir(out_root):
         import shutil
 
-        if os.path.isdir(out_root):
-            shutil.rmtree(out_root)
+        shutil.rmtree(out_root)
 
     pending = [(uid, files) for uid, files in units if uid not in done]
     skipped = [uid for uid, _ in units if uid in done]
     if max_units is not None:
         pending = pending[:max_units]
 
-    # Concurrent units share the cores: enough units in flight that one
-    # unit's stage boundaries (shuffle map → reduce → commit) overlap
-    # another unit's compute — measured at local[32], 2 in-flight units
-    # leave ~40% of cores idle between stages while 4 keep them busy.
-    total_cores = spark.sparkContext.defaultParallelism
-    in_flight = max(1, min(len(units), max(2, total_cores // 2)))
-
-    def run_one(unit):
-        unit_id, files = unit
-        lineage.clean_partial_unit(out_root, unit_id)
-        unit_out = os.path.join(out_root, "sinks", f"unit={unit_id}")
-        tu = time.time()
-        _process_unit(spark, files, unit_out, fmt, ref_now, n_buckets)
-        lineage.record_unit(
-            out_root,
-            {
-                "unit_id": unit_id,
-                "files": files,
-                "wall_s": round(time.time() - tu, 3),
-            },
+    # A batch is the units in flight: one write job, one file per sink
+    # cell, over several units' files, while a kill still loses at most
+    # this many units.
+    cores = spark.sparkContext.defaultParallelism
+    size = max(1, min(len(pending), max(2, cores // 2)))
+    for i in range(0, len(pending), size):
+        batch = pending[i:i + size]
+        name = f"batch={batch[0][0]}"
+        tb = time.time()
+        # The only pass over the batch's input.  Iceberg when the
+        # runtime jar is present, partitioned parquet otherwise (probe +
+        # logged fallback — sources/tableformat.py).
+        write_partitioned(
+            sink_frame(spark, [f for _, files in batch for f in files],
+                       fmt, ref_now, n_buckets),
+            lineage.batch_dir(out_root, name),
+            ["sink_sev", "sink_key"],
         )
-        return unit_id
-
-    ran: list[str] = []
-    if pending:
-        with ThreadPoolExecutor(max_workers=in_flight) as ex:
-            ran = list(ex.map(run_one, pending))
+        wall_s = round(time.time() - tb, 3)
+        for uid, files in batch:
+            lineage.record_unit(out_root, {
+                "unit_id": uid,
+                "files": files,
+                "wall_s": wall_s,
+                "batch": name,
+                "batch_units": [u for u, _ in batch],
+            })
 
     # ONE aggregation over every committed sink gives both the metrics
-    # table and the summary's row counts.  Only committed units are
-    # read: a killed attempt can leave an uncommitted sink directory.
-    # Sorted by cell so the metrics file is deterministic.
+    # table and the summary's row counts.  Only committed batches are
+    # read.  Sorted by cell so the metrics file is deterministic.
     committed = lineage.completed_units(out_root)
     rows_valid = rows_dlq = 0
     if committed:
@@ -230,7 +241,7 @@ def run_pipeline(
 
     return {
         "units_total": len(units),
-        "units_run": sorted(ran),
+        "units_run": sorted(uid for uid, _ in pending),
         "units_skipped": sorted(skipped),
         "complete": len(committed) == len(units),
         "rows_valid": rows_valid,
@@ -243,12 +254,14 @@ def _realpaths(files: list[str]) -> list[str]:
     return sorted(os.path.realpath(f) for f in files)
 
 
-def _read_sinks(spark: SparkSession, out_root: str, unit_ids) -> DataFrame:
-    sinks = os.path.join(out_root, "sinks")
-    paths = [os.path.join(sinks, f"unit={u}") for u in sorted(unit_ids)]
+def _read_sinks(spark: SparkSession, out_root: str, committed) -> DataFrame:
+    """The sink rows of the committed units' batch directories."""
+    paths = [lineage.batch_dir(out_root, b)
+             for b in sorted({rec["batch"] for rec in committed.values()})]
     if sink_format(spark) == "parquet":
-        return spark.read.option("basePath", sinks).parquet(*paths)
-    # Iceberg path-based tables are one table per unit — union them.
+        return spark.read.option(
+            "basePath", os.path.join(out_root, "sinks")).parquet(*paths)
+    # Iceberg path-based tables are one table per batch — union them.
     return reduce(
         DataFrame.unionByName, [read_table(spark, p) for p in paths]
     )

@@ -8,8 +8,8 @@ one, so this module probes for it once per session and routes writes/
 reads accordingly:
 
 * **Iceberg present** → partitioned Iceberg writes (atomic snapshot
-  commits give the pipeline's per-unit resume "for free" on top of our
-  lineage markers, and readers get hidden-partition pruning).
+  commits give the pipeline's all-or-nothing batch commit "for free" on
+  top of our lineage markers, and readers get hidden-partition pruning).
 * **Iceberg absent (this sandbox: no jar baked in, no network to fetch
   one)** → plain partitioned parquet with an explicitly logged reason.
   Every correctness property the tests pin (routed-row equality,

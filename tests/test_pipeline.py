@@ -176,9 +176,10 @@ def test_approx_convs_over_all_units(spark, input_dir, pipeline_out):
 
 def test_summary_ignores_uncommitted_unit_output(spark, input_dir,
                                                  tmp_path_factory):
-    """A killed attempt can leave an uncommitted sink directory behind.
-    The summary's row counts come from the committed units' sinks only,
-    also on a call that runs no unit."""
+    """A killed attempt can leave an uncommitted batch directory behind.
+    The summary's row counts come from the committed batches' sinks
+    only, also on a call that runs no unit, and that resume deletes the
+    uncommitted directory."""
     import shutil
 
     out = str(tmp_path_factory.mktemp("uncommitted_out"))
@@ -186,20 +187,147 @@ def test_summary_ignores_uncommitted_unit_output(spark, input_dir,
                       resume=True, max_units=2)
     assert s1["units_run"] == ["0000", "0001"] and not s1["complete"]
     sinks = os.path.join(out, "sinks")
-    shutil.copytree(os.path.join(sinks, "unit=0000"),
-                    os.path.join(sinks, "unit=0003"))
+    assert sorted(os.listdir(sinks)) == ["batch=0000"]
+    planted = os.path.join(sinks, "batch=0003")
+    shutil.copytree(os.path.join(sinks, "batch=0000"), planted)
     s2 = run_pipeline(spark, input_dir, out, n_units=4, n_buckets=8,
                       resume=True, max_units=0)
     assert s2["units_run"] == [] and not s2["complete"]
+    assert not os.path.exists(planted)
     assert (s2["rows_valid"], s2["rows_dlq"]) == (
         s1["rows_valid"], s1["rows_dlq"])
-    valid = dlq = 0
-    for u in s1["units_run"]:
-        unit = spark.read.parquet(os.path.join(sinks, f"unit={u}"))
-        valid += unit.filter(F.col("sink_sev") != "dlq").count()
-        dlq += unit.filter(F.col("sink_sev") == "dlq").count()
+    batch = spark.read.parquet(os.path.join(sinks, "batch=0000"))
+    valid = batch.filter(F.col("sink_sev") != "dlq").count()
+    dlq = batch.filter(F.col("sink_sev") == "dlq").count()
     assert (s2["rows_valid"], s2["rows_dlq"]) == (valid, dlq)
     assert 0 < valid + dlq < N_ROWS
+
+
+def test_partial_batch_markers_resume_exactly(spark, input_dir, pipeline_out,
+                                              tmp_path_factory, monkeypatch):
+    """A batch commits all-or-nothing: a run killed after the first of
+    its two unit markers leaves no committed unit, and the resume
+    matches an uninterrupted run — same sink rows, same metrics, no
+    duplicate turn."""
+    import pandas as pd
+
+    from go_parsesyslog_spark.plans import lineage
+
+    out = str(tmp_path_factory.mktemp("partial_markers_out"))
+    record_unit = lineage.record_unit
+    written = []
+
+    def killed_after_first(out_root, record):
+        if written:
+            raise RuntimeError("killed between markers")
+        record_unit(out_root, record)
+        written.append(record["unit_id"])
+
+    monkeypatch.setattr(lineage, "record_unit", killed_after_first)
+    with pytest.raises(RuntimeError, match="killed between markers"):
+        run_pipeline(spark, input_dir, out, n_units=4, n_buckets=8,
+                     resume=True, max_units=2)
+    monkeypatch.undo()
+    assert written == ["0000"]
+    assert os.path.exists(lineage.marker_path(out, "0000"))
+    assert lineage.completed_units(out) == {}
+
+    s = run_pipeline(spark, input_dir, out, n_units=4, n_buckets=8,
+                     resume=True)
+    assert s["units_skipped"] == [] and s["complete"]
+    assert s["units_run"] == ["0000", "0001", "0002", "0003"]
+    want_out, want = pipeline_out
+    assert (s["rows_valid"], s["rows_dlq"]) == (
+        want["rows_valid"], want["rows_dlq"])
+    got_rows = spark.read.parquet(os.path.join(out, "sinks")).select(*KEY_COLS)
+    want_rows = spark.read.parquet(
+        os.path.join(want_out, "sinks")).select(*KEY_COLS)
+    assert got_rows.exceptAll(want_rows).isEmpty()
+    assert want_rows.exceptAll(got_rows).isEmpty()
+    assert got_rows.select("conv_id", "turn_idx").distinct().count() == N_ROWS
+    pd.testing.assert_frame_equal(
+        pd.read_parquet(os.path.join(out, "metrics")),
+        pd.read_parquet(os.path.join(want_out, "metrics")),
+    )
+
+
+BATCH_PROBE = """
+import glob, json, os, sys
+sys.path.insert(0, {root!r})
+from go_parsesyslog_spark.plans import lineage
+from go_parsesyslog_spark.plans.pipeline import run_pipeline
+from go_parsesyslog_spark.session import get_spark
+spark = get_spark(master="local[4]",
+                  extra_conf={{"spark.driver.memory": "1g",
+                               "spark.ui.showConsoleProgress": "false"}})
+summary = run_pipeline(spark, {inp!r}, {out!r}, n_units=4, n_buckets=8,
+                       resume=False)
+spark.stop()
+batches = {{}}
+for uid, rec in lineage.completed_units({out!r}).items():
+    batches.setdefault(rec["batch"], rec["batch_units"])
+sinks = os.path.join({out!r}, "sinks")
+print("PROBE " + json.dumps({{
+    "summary": summary,
+    "batches": batches,
+    "cells": {{b: len(glob.glob(os.path.join(sinks, b, "sink_sev=*",
+                                            "sink_key=*")))
+              for b in batches}},
+    "files": len(glob.glob(os.path.join(sinks, "*", "sink_sev=*",
+                                        "sink_key=*", "*.parquet"))),
+}}))
+"""
+
+
+def test_batches_on_four_cores(input_dir, tmp_path):
+    """On local[4] two units are in flight, so 4 units run as 2 write
+    jobs, and each batch writes one file per sink cell: files per run
+    are the sum of cells per batch.  Its own driver process, for a
+    4-core session."""
+    import json
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "probe.py"
+    script.write_text(BATCH_PROBE.format(
+        root=root, inp=input_dir, out=str(tmp_path / "out")))
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable,
+               PYSPARK_DRIVER_PYTHON=sys.executable)
+    run = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-4000:]
+    line = next(l for l in run.stdout.splitlines() if l.startswith("PROBE "))
+    got = json.loads(line[len("PROBE "):])
+    assert got["summary"]["complete"]
+    assert got["summary"]["rows_valid"] + got["summary"]["rows_dlq"] == N_ROWS
+    assert got["batches"] == {"batch=0000": ["0000", "0001"],
+                              "batch=0002": ["0002", "0003"]}
+    assert got["files"] == sum(got["cells"].values()) > 0
+
+
+def test_metrics_write_is_atomic(tmp_path, monkeypatch):
+    """A metrics write killed part-way leaves no ``part-00000.parquet``
+    behind: the file appears only by a rename of a finished one."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from go_parsesyslog_spark.plans.pipeline import _write_pandas_parquet
+
+    def torn_write(table, where, **kwargs):
+        with open(where, "wb") as f:
+            f.write(b"PAR1 torn")
+        raise OSError("killed mid-write")
+
+    monkeypatch.setattr(pq, "write_table", torn_write)
+    out = tmp_path / "metrics"
+    with pytest.raises(OSError, match="killed mid-write"):
+        _write_pandas_parquet(pd.DataFrame({"turn_count": [1, 2]}), str(out))
+    assert os.listdir(out) == []
+    monkeypatch.undo()
+    _write_pandas_parquet(pd.DataFrame({"turn_count": [1, 2]}), str(out))
+    assert os.listdir(out) == ["part-00000.parquet"]
+    assert pd.read_parquet(out)["turn_count"].tolist() == [1, 2]
 
 
 def test_resume_skips_committed_units(spark, input_dir, tmp_path_factory):
@@ -314,7 +442,7 @@ def test_salting_splits_hot_conversations(spark, input_dir):
 def test_fanout_write_splits_oversized_cells(spark, input_dir,
                                              tmp_path_factory):
     """The fan-out write gives a (sink_sev, sink_key) cell one file per
-    unit, and AQE splits a cell whose reduce partition exceeds the
+    batch, and AQE splits a cell whose reduce partition exceeds the
     advisory size over several writers — with an identical row multiset
     either way.  One unit, so its write has several map tasks: AQE
     splits a reduce partition by map-output blocks."""
@@ -334,7 +462,7 @@ def test_fanout_write_splits_oversized_cells(spark, input_dir,
 
     def files_per_dir(root):
         counts = {}
-        for f in glob.glob(os.path.join(root, "sinks", "unit=*",
+        for f in glob.glob(os.path.join(root, "sinks", "batch=*",
                                         "sink_sev=*", "sink_key=*",
                                         "*.parquet")):
             counts.setdefault(os.path.dirname(f), 0)

@@ -4,10 +4,13 @@ of two checkouts compare with one ``diff``.
 
 Usage: python tools/plan_dump.py sf_dir [name ...]
 
-Each ``name`` is a key of ``__spark_entry__.queries()`` or one of
+Each ``name`` is a key of ``__spark_entry__.queries()``, one of
 ``parse_logs:native`` / ``parse_logs:arrow``: the parse engine over one
 transcript file generated with perfbench's ``mixed_batch`` mix, with the
-pipeline's arguments.  With no names, ``DEFAULT_NAMES`` are dumped.
+pipeline's arguments, or ``pipeline_batch``: the fan-out write input
+(``plans.pipeline.sink_frame``) of one batch, the first two of
+perfbench's four units over eight such files — the batch a 4-core run
+writes first.  With no names, ``DEFAULT_NAMES`` are dumped.
 Building a query may run Spark jobs (schema inference, probes, eager
 checkpoints); no query is collected.
 
@@ -58,6 +61,23 @@ def parse_plan(spark, input_dir: str, engine: str):
                       fmt="auto", ref_now=REF_NOW, engine=engine)
 
 
+def batch_plan(spark, input_dir: str):
+    from perfbench.inputs import N_BUCKETS, N_UNITS, WORKLOADS
+    from go_parsesyslog_spark.plans.pipeline import plan_units, sink_frame
+    from go_parsesyslog_spark.sources.transcripts import (
+        REF_NOW,
+        write_transcripts_parquet,
+    )
+
+    if not os.path.isdir(input_dir):
+        write_transcripts_parquet(input_dir, PARSE_ROWS, seed=11,
+                                  chunk_rows=PARSE_ROWS // 8,
+                                  **WORKLOADS["mixed_batch"].gen)
+    units = plan_units(input_dir, N_UNITS)
+    files = [f for _, members in units[:2] for f in members]
+    return sink_frame(spark, files, "auto", REF_NOW, N_BUCKETS)
+
+
 def main() -> int:
     import __spark_entry__ as entry_mod
     from go_parsesyslog_spark.session import get_spark
@@ -73,6 +93,8 @@ def main() -> int:
         for name in names:
             if name.startswith("parse_logs:"):
                 df = parse_plan(spark, tmp, name.split(":", 1)[1])
+            elif name == "pipeline_batch":
+                df = batch_plan(spark, os.path.join(tmp, "batch"))
             else:
                 df = qs[name](spark, sf_dir)
             print(f"== {name} ==\n{masked_plan(df)}", flush=True)

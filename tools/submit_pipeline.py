@@ -10,11 +10,13 @@ The north-rule deployment shape: the package ships as a zip via
 
 Every setting spark-submit passes (``--master``, ``--driver-memory``,
 ``--executor-*``, ``--conf k=v``) wins: `get_spark` fills in its package
-defaults (AQE, Arrow, UTC, 16m scan splits, ...) only for keys the
-launcher left unset.  Prints one JSON summary line (units run /
-skipped, row counts, wall seconds) so orchestrators can parse the
-result.  Re-running after a kill resumes from the per-unit lineage
-markers unless --no-resume.
+defaults (Arrow, UTC, shuffle width, ...) only for keys the launcher
+left unset; AQE and scan splits keep Spark's own defaults.  Prints one
+JSON summary line (units run / skipped, row counts, wall seconds) so
+orchestrators can parse the result.  Re-running after a kill resumes
+from the lineage markers unless --no-resume: units of committed batches
+are skipped, and the output of a batch killed before all its markers
+landed is deleted and rewritten.
 """
 
 from __future__ import annotations
