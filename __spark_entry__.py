@@ -118,9 +118,11 @@ def _t(
     par = spark.sparkContext.defaultParallelism
     row_groups, size = _t_layout(path)
     # one row group == unsplittable: no maxPartitionBytes setting can
-    # parallelize the scan.  Multi-row-group files (lineitem, orders)
-    # already split; re-shuffling those 100+ MB facts here would cost
-    # more than the downstream gains (joins/aggs re-key them anyway).
+    # parallelize the scan, so every table with a key repartitions here
+    # once it reaches the size floor (every bench table has one row
+    # group).  A multi-row-group file already splits; re-shuffling it
+    # here would cost more than the downstream gains (joins/aggs re-key
+    # it anyway).
     if row_groups == 1 and par > 1 and size >= min_bytes:
         df = df.repartition(par, F.col(key))
     return df
@@ -382,13 +384,9 @@ def q_severity_class_counts(spark, sf_dir):
     """Route-stage aggregation shape: counts per severity_class ×
     bucket."""
     ev = _t(spark, sf_dir, "events", parallel=False)
-    sev = (F.col("event_id") % 192) % 8
-    cls = (
-        F.when(sev <= 2, "emergency")
-        .when(sev == 3, "error")
-        .when(sev <= 5, "warn")
-        .otherwise("info")
-    )
+    from go_parsesyslog_spark.functions.priority import severity_class
+
+    cls = severity_class(((F.col("event_id") % 192) % 8).cast("int"))
     return (
         ev.select(cls.alias("severity_class"),
                   (F.col("event_id") % 16).cast("long").alias("bucket"))
@@ -400,13 +398,9 @@ def q_severity_class_counts(spark, sf_dir):
 def q_hourly_sink_agg(spark, sf_dir):
     """Windowed per-sink counts (F.window tumbling 1 hour)."""
     ev = _t(spark, sf_dir, "events", parallel=False)
-    sev = (F.col("event_id") % 192) % 8
-    cls = (
-        F.when(sev <= 2, "emergency")
-        .when(sev == 3, "error")
-        .when(sev <= 5, "warn")
-        .otherwise("info")
-    )
+    from go_parsesyslog_spark.functions.priority import severity_class
+
+    cls = severity_class(((F.col("event_id") % 192) % 8).cast("int"))
     return (
         ev.withColumn("severity_class", cls)
         .groupBy("severity_class", F.window("ts", "1 hour").alias("w"))

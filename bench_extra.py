@@ -5,6 +5,10 @@ Runs any subset of the registered entry queries against
 ``$SPARK_GRAFT_SF_DIR`` with the same methodology as bench.py (one
 untimed warm run, then a timed noop-sink run), labels each job
 (``setJobDescription``) and can dump ``explain("formatted")`` plans.
+``--build-jobs`` instead counts the Spark jobs each query runs while it
+is built, before any action (schema inference, eager lineage cuts,
+size probes): the build runs inside a job group and the status tracker
+lists that group's jobs.
 
 Usage::
 
@@ -15,6 +19,7 @@ Usage::
     python bench_extra.py --explain-only --plans plans/r06 --suffix after --all
         # dump plans without timing (fast)
     python bench_extra.py --repeat 3 q1        # median-of-N timing
+    python bench_extra.py --build-jobs q1 q2   # jobs run while building
 """
 
 from __future__ import annotations
@@ -33,6 +38,7 @@ def main() -> None:
     names: list[str] = []
     run_all = False
     explain_only = False
+    build_jobs = False
     i = 0
     while i < len(args):
         a = args[i]
@@ -40,6 +46,8 @@ def main() -> None:
             run_all = True
         elif a == "--explain-only":
             explain_only = True
+        elif a == "--build-jobs":
+            build_jobs = True
         elif a == "--plans":
             i += 1
             opts["plans"] = args[i]
@@ -75,8 +83,20 @@ def main() -> None:
         os.makedirs(opts["plans"], exist_ok=True)
 
     timings: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     for name in names:
         fn = qs[name]
+        if build_jobs:
+            sc = spark.sparkContext
+            sc.setJobGroup(f"build:{name}", f"build:{name}")
+            fn(spark, sf_dir)
+            sc._jsc.clearJobGroup()
+            jobs[name] = len(
+                sc.statusTracker().getJobIdsForGroup(f"build:{name}")
+            )
+            print(f"  {name}: {jobs[name]} build jobs", file=sys.stderr,
+                  flush=True)
+            continue
         if opts["plans"]:
             df = fn(spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(
@@ -110,7 +130,8 @@ def main() -> None:
         pass
     spark.stop()
     print(json.dumps({"sf_dir": sf_dir, "cpus": cpus,
-                      "queries": timings}))
+                      **({"build_jobs": jobs} if build_jobs
+                         else {"queries": timings})}))
 
 
 if __name__ == "__main__":

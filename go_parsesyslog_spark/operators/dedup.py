@@ -24,18 +24,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # fixed, documented hash parameters — deterministic across runs/executors
 _MERSENNE = (1 << 61) - 1
 
-# Doc count above which minhash_lsh_jaccard_pairs skips its text-bytes
-# probe (the gram table cannot fit a broadcast there).
-VERIFY_BROADCAST_DOCS = 2_000_000
 # Cap on the shingle bytes minhash_lsh_jaccard_pairs broadcasts into its
-# verify stage; above it the arrays attach by shuffle-hash join.
+# verify stage (bounded by 8 × the input's text bytes, observed in the
+# signature pass); above it the arrays attach by shuffle-hash join.
 # Raising it needs matching driver/executor heap.
 VERIFY_BROADCAST_BYTES = 256_000_000
 # Minhash LSH buckets above this many members emit (and verify) only
@@ -392,7 +390,9 @@ def minhash_lsh_jaccard_pairs(
     # consumers below (banding and the gram join) cannot re-trigger the
     # UDF per branch.  The cut is eager: cut lazily, it materialized
     # inside a later job whose scheduler logged a `Failed to update
-    # accumulator` error per task.
+    # accumulator` error per task.  The same job observes the input's
+    # doc count and text bytes, which size the verify stage below, so
+    # sizing costs no scan of its own.
     a, b = _minhash_coeffs(num_hashes, seed)
 
     def _sig_grams(texts):
@@ -413,13 +413,18 @@ def minhash_lsh_jaccard_pairs(
     sig_grams_udf = F.pandas_udf(
         "struct<signature: array<bigint>, sh: binary>"
     )(_sig_grams)
+    sized = Observation()
     sg = (
-        df.select(F.col(id_col),
-                  sig_grams_udf(F.col(text_col)).alias("_sg"))
+        df.observe(sized, F.count(F.lit(1)).alias("n_docs"),
+                   F.sum(F.octet_length(text_col)).alias("text_bytes"))
+        .select(F.col(id_col),
+                sig_grams_udf(F.col(text_col)).alias("_sg"))
         .select(F.col(id_col), F.col("_sg.signature").alias("signature"),
                 F.col("_sg.sh").alias("sh"))
         .localCheckpoint(eager=True)
     )
+    sizes = sized.get  # text_bytes is NULL on an empty input
+    n_docs, text_bytes = sizes["n_docs"], sizes["text_bytes"] or 0
     # the verify closure ships these values
     pair_cap, dense_cells = BUCKET_PAIR_CAP, DENSE_CELLS
     banded = _banded_keys(sg, id_col, num_hashes, bands)
@@ -540,25 +545,12 @@ def minhash_lsh_jaccard_pairs(
 
     # coarse-group count scales with the member-row volume so average
     # per-group residency is bounded at any corpus size (bands × docs
-    # is an upper bound on member rows); the same single input probe
-    # also bounds the gram-table size for the attach-strategy choice
-    # below (shingle bytes ≤ 8 × text bytes: ≤ one 8-byte hash per
-    # character)
-    n_docs = df.count()
+    # is an upper bound on member rows); the observed text bytes bound
+    # the gram-table size for the attach-strategy choice below (shingle
+    # bytes ≤ 8 × text bytes: ≤ one 8-byte hash per character)
     n_groups = _verify_group_count(df, bands * n_docs, CHAIN_GROUP_ROWS)
     vgrp = F.pmod(F.xxhash64("band", "band_hash", "grp"), F.lit(n_groups))
-    # The text-bytes probe is itself a text-column scan, so it only
-    # runs when the (column-pruned, cheap) doc count says the gram
-    # table could plausibly fit a broadcast — at corpus scale the
-    # count alone rules it out and the plan is byte-identical to the
-    # shuffle-join path below with zero extra scans.
-    gram_bytes_bound = None
-    if n_docs <= VERIFY_BROADCAST_DOCS:
-        tb = df.agg(F.sum(F.octet_length(text_col))).collect()[0][0]
-        # shingle bytes ≤ 8 × text bytes (≤ one 8-byte hash per char)
-        gram_bytes_bound = 8 * int(tb or 0)
-    if (gram_bytes_bound is not None
-            and gram_bytes_bound <= VERIFY_BROADCAST_BYTES):
+    if 8 * text_bytes <= VERIFY_BROADCAST_BYTES:
         # Attach the arrays AFTER the verify-group shuffle (guide §2.3
         # "shuffle keys and metadata, move heavy bytes once"): the
         # narrow member rows shuffle to their coarse verify group
@@ -636,19 +628,24 @@ def _cc_local_labels(edges: DataFrame) -> DataFrame:
     )
 
 
-def _edge_signature(e: DataFrame) -> tuple:
-    """Order-insensitive multiset fingerprint of an edge set: count
-    plus two independent hash sums (canonical orientation) — a star
-    round that leaves it unchanged has reached the fixpoint."""
+def _cut_edges(e: DataFrame) -> tuple[DataFrame, tuple]:
+    """Materialize ``e`` with an eager localCheckpoint and return it with
+    its order-insensitive multiset fingerprint — count plus two
+    independent hash sums (canonical orientation), observed in the same
+    job.  A star round that leaves the fingerprint unchanged has reached
+    the fixpoint."""
     lo, hi = F.least("u", "v"), F.greatest("u", "v")
-    row = e.agg(
+    sig = Observation()
+    cut = e.observe(
+        sig,
         F.count(F.lit(1)).alias("n"),
         # decimal(38) accumulator: a bigint sum overflows under ANSI
         F.sum(F.xxhash64(lo, hi).cast("decimal(38,0)")).alias("h1"),
         F.sum(F.xxhash64(hi, lo, F.lit(7)).cast("decimal(38,0)"))
         .alias("h2"),
-    ).collect()[0]
-    return (row["n"], row["h1"], row["h2"])
+    ).localCheckpoint(eager=True)
+    m = sig.get
+    return cut, (m["n"], m["h1"], m["h2"])
 
 
 def _cc_star_labels(
@@ -656,7 +653,7 @@ def _cc_star_labels(
 ) -> DataFrame:
     """(node, lbl=component-min) for every node of ``edges`` by the
     distributed star alternation of :func:`dedup_clusters`;
-    ``prev_sig`` is ``edges``' own :func:`_edge_signature`."""
+    ``prev_sig`` is ``edges``' own fingerprint from :func:`_cut_edges`."""
     for _ in range(max_iters):
         # large-star: symmetric neighborhoods; every node u attaches
         # its larger neighbors to m = min(N(u) ∪ {u})
@@ -682,16 +679,15 @@ def _cc_star_labels(
             .distinct()
         )
         omins = o.groupBy("u").agg(F.min("v").alias("m"))
-        edges = (
+        # the cut truncates per-round lineage
+        edges, sig = _cut_edges(
             o.join(omins, "u")
             .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(omins.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)  # truncate per-round lineage
         )
-        sig = _edge_signature(edges)
         if sig == prev_sig:
             break
         prev_sig = sig
@@ -753,35 +749,34 @@ def dedup_clusters(
 
     Every star step is a groupBy + join + distinct on node-id keys
     (narrow 2-column rows; AQE handles skew); each round is
-    localCheckpoint-truncated and the fixpoint probe is a 1-row
-    count/hash aggregate of the edge multiset.
+    localCheckpoint-truncated, and the same job observes the fixpoint
+    probe, a count/hash fingerprint of the edge multiset.
 
     Pair graphs at or below ``LOCAL_EDGE_CAP`` edges (4M —
     ~64 MB of id pairs, far under a task's memory budget) bypass the
     loop: one executor task runs vectorized union-find over the whole
     edge set (:func:`_cc_local_labels`), with provably identical
-    labels.  The cap is checked against the exact edge count (already
-    computed for the fixpoint probe), so the distributed loop remains
+    labels.  The cap is checked against the exact edge count (observed
+    for the fixpoint probe), so the distributed loop remains
     the automatic path for genuinely large near-dup graphs; set
     ``LOCAL_EDGE_CAP = 0`` to force it.
 
     Exactly SQL-reproducible: a recursive CTE computing min reachable
     id is the DuckDB oracle (driver query ``dedup_clusters``)."""
-    edges = (
+    # eager cut: see minhash_lsh_jaccard_pairs
+    edges, prev_sig = _cut_edges(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)  # eager: see minhash_lsh_jaccard_pairs
     )
-    prev_sig = _edge_signature(edges)
     # SMALL pair graphs (the common case even at 100 TB — the verified
     # near-dup subgraph is orders of magnitude smaller than the corpus)
     # skip the distributed loop entirely: each star round costs ~6 tiny
-    # stages plus a fixpoint-probe job, ~0.4-0.6 s of pure scheduling
+    # stages plus its edge cut, ~0.4-0.6 s of pure scheduling
     # per round at any data size (measured sf1.0: the loop was ~2.5 s
     # of dedup_clusters' 5.4 s on a few-thousand-edge graph).  Below
-    # ``LOCAL_EDGE_CAP`` edges (~64 MB of (u, v) longs; the count comes
-    # free from the signature probe) the whole component computation
+    # ``LOCAL_EDGE_CAP`` edges (~64 MB of (u, v) longs; the count is
+    # observed by the edge cut) the whole component computation
     # runs as ONE executor task (_cc_local_labels) with identical
     # output.  The star loop remains the at-scale path and stays pinned
     # by the LOCAL_EDGE_CAP = 0 tests.
