@@ -15,19 +15,23 @@ committed batch's sink (column-pruned readback).
 
 Work units are groups of input files: the unit is the resume granule
 (plans/lineage.py).  The pending units run in batches, one after
-another; a batch is the units a run keeps in flight, and its input is
-scanned exactly once by ONE write job into ONE commit directory, with
-scan through route ONE narrow stage feeding the fan-out shuffle.  A
-batch commits all-or-nothing, so a sink file holds a cell's rows of a
-whole batch: files per run are batches × cells, not units × cells.
+another; a batch is the units a run keeps in flight: consecutive
+pending units while their input bytes fit in one scan wave
+(``spark.sql.files.maxPartitionBytes`` × ``defaultParallelism``), and
+at least one unit.  Its input is scanned exactly once by ONE write job
+into ONE commit directory, with scan through route ONE narrow stage
+feeding the fan-out shuffle.  A batch commits all-or-nothing, so a sink
+file holds a cell's rows of a whole batch: files per run are batches ×
+cells, not units × cells, and an input under one wave is one batch.
 
 Scale design notes (100 TB / 1000 executors):
 * no pass over the input precedes the units: hot-conversation skew is
   handled by the write's rebalance (below), from measured sizes, so
   every sink row has ``salt = 0``;
-* unit size bounds the blast radius of a failure — a killed run loses
-  at most the in-flight units (one batch); each marker rename is
-  atomic, and a batch counts only once all its markers are in;
+* the scan wave bounds the blast radius of a failure — a killed run
+  loses at most the in-flight batch: one scan wave of input, or one
+  unit if a unit is larger; each marker rename is atomic, and a batch
+  counts only once all its markers are in;
 * the fan-out shuffle is a rebalance keyed (sink_sev, sink_key) with no
   width of its own: it starts at ``spark.sql.shuffle.partitions``, and
   AQE coalesces small reduce partitions and splits one larger than
@@ -43,6 +47,7 @@ Scale design notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 from functools import reduce
@@ -57,6 +62,7 @@ from go_parsesyslog_spark.operators.parse import parse_logs
 from go_parsesyslog_spark.operators.route import with_route_columns
 from go_parsesyslog_spark.plans import lineage
 from go_parsesyslog_spark.sources.tableformat import (
+    parquet_footer_schema,
     read_table,
     sink_format,
     write_partitioned,
@@ -82,6 +88,27 @@ def plan_units(input_path: str, n_units: int) -> list[tuple[str, list[str]]]:
         if members:
             units.append((f"{u:04d}", members))
     return units
+
+
+def plan_batches(
+    pending: list[tuple[str, list[str]]],
+    file_bytes: dict[str, int],
+    wave_bytes: int,
+) -> list[list[tuple[str, list[str]]]]:
+    """Group the pending units, in order and never split, into batches:
+    each takes consecutive units while their files' bytes stay within
+    ``wave_bytes``, and at least one unit, so a unit larger than a wave
+    is a batch of its own."""
+    batches: list[list[tuple[str, list[str]]]] = []
+    held = 0
+    for unit in pending:
+        size = sum(file_bytes[f] for f in unit[1])
+        if not batches or held + size > wave_bytes:
+            batches.append([])
+            held = 0
+        batches[-1].append(unit)
+        held += size
+    return batches
 
 
 def _write_pandas_parquet(pdf: pd.DataFrame, out_dir: str) -> None:
@@ -113,8 +140,9 @@ def sink_frame(
     n_buckets: int,
 ) -> DataFrame:
     """The fan-out write's input over ``files``: scan → parse → enrich →
-    route, rebalanced on the sink cell."""
-    df = spark.read.parquet(*files)
+    route, rebalanced on the sink cell.  The scan takes its schema from
+    the first file's footer, so building the frame runs no Spark job."""
+    df = spark.read.schema(parquet_footer_schema(files[0])).parquet(*files)
     parsed = parse_logs(df, text_col="text", fmt=fmt, ref_now=ref_now)
     enriched = enrich(parsed, spark)
     routed = with_route_columns(enriched, n_buckets=n_buckets)
@@ -150,11 +178,14 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the full pipeline.  Returns a summary dict.
 
-    The pending units run in batches of ``max(2, cores // 2)`` (fewer
-    when fewer are pending), one batch after another.  Each batch is
-    one write job into ``sinks/batch=<first unit id>/`` and commits
-    all-or-nothing (plans/lineage.py); ``units_run`` and
-    ``units_skipped`` still list unit ids.
+    The pending units run in batches, one batch after another: each
+    takes consecutive units while their input bytes fit in one scan
+    wave, ``spark.sql.files.maxPartitionBytes`` × ``defaultParallelism``
+    of the session, and at least one unit (``plan_batches``).  Each
+    batch is one write job into ``sinks/batch=<first unit id>/`` and
+    commits all-or-nothing (plans/lineage.py), so a kill loses at most
+    one scan wave of input, or one unit if a unit is larger;
+    ``units_run`` and ``units_skipped`` still list unit ids.
 
     ``max_units`` limits how many *pending* units are processed this
     call — used by tests to simulate a killed run.  A resume whose unit
@@ -193,12 +224,13 @@ def run_pipeline(
         pending = pending[:max_units]
 
     # A batch is the units in flight: one write job, one file per sink
-    # cell, over several units' files, while a kill still loses at most
-    # this many units.
-    cores = spark.sparkContext.defaultParallelism
-    size = max(1, min(len(pending), max(2, cores // 2)))
-    for i in range(0, len(pending), size):
-        batch = pending[i:i + size]
+    # cell, over as many units as one scan wave of input holds.
+    wave_bytes = (
+        spark._jsparkSession.sessionState().conf()  # noqa: SLF001
+        .filesMaxPartitionBytes() * spark.sparkContext.defaultParallelism
+    )
+    file_bytes = {f: os.path.getsize(f) for _, files in pending for f in files}
+    for batch in plan_batches(pending, file_bytes, wave_bytes):
         name = f"batch={batch[0][0]}"
         tb = time.time()
         # The only pass over the batch's input.  Iceberg when the
@@ -255,11 +287,20 @@ def _realpaths(files: list[str]) -> list[str]:
 
 
 def _read_sinks(spark: SparkSession, out_root: str, committed) -> DataFrame:
-    """The sink rows of the committed units' batch directories."""
+    """The sink rows of the committed units' batch directories.  The
+    parquet read takes its schema from one sink file's footer plus the
+    partition columns as strings, so it runs no inference job and a
+    ``sink_key`` or ``batch`` of digits stays a string."""
     paths = [lineage.batch_dir(out_root, b)
              for b in sorted({rec["batch"] for rec in committed.values()})]
     if sink_format(spark) == "parquet":
-        return spark.read.option(
+        schema = parquet_footer_schema(min(
+            f for p in paths
+            for f in glob.glob(os.path.join(
+                p, "sink_sev=*", "sink_key=*", "*.parquet"))))
+        for c in ("batch", "sink_sev", "sink_key"):
+            schema = schema.add(c, "string")
+        return spark.read.schema(schema).option(
             "basePath", os.path.join(out_root, "sinks")).parquet(*paths)
     # Iceberg path-based tables are one table per batch — union them.
     return reduce(

@@ -24,9 +24,11 @@ cannot crash a session that lacks the jar.
 
 from __future__ import annotations
 
+import json
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _ICEBERG_CLASS = "org.apache.iceberg.spark.SparkCatalog"
 _probe_cache: dict[str, bool] = {}
@@ -49,6 +51,25 @@ def iceberg_available(spark: SparkSession) -> bool:
                 file=sys.stderr,
             )
     return _probe_cache[key]
+
+
+def parquet_footer_schema(path: str) -> StructType:
+    """The schema Spark infers for the parquet file ``path``, read from
+    its footer alone: no Spark job.  A file Spark wrote carries its own
+    schema there (a file read makes every column nullable either way);
+    otherwise the parquet types map as Spark's inference maps them,
+    where a timestamp not adjusted to UTC is ``TimestampNTZType``
+    (``prefer_timestamp_ntz=True``; without it ``from_arrow_schema``
+    gives ``TimestampType``, which changes query semantics)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = pq.read_schema(path)
+    spark_json = (schema.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata")
+    if spark_json is not None:
+        return StructType.fromJson(json.loads(spark_json))
+    return from_arrow_schema(schema, prefer_timestamp_ntz=True)
 
 
 def sink_format(spark: SparkSession) -> str:

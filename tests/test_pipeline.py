@@ -260,50 +260,205 @@ from go_parsesyslog_spark.session import get_spark
 spark = get_spark(master="local[4]",
                   extra_conf={{"spark.driver.memory": "1g",
                                "spark.ui.showConsoleProgress": "false"}})
-summary = run_pipeline(spark, {inp!r}, {out!r}, n_units=4, n_buckets=8,
-                       resume=False)
+for name, max_partition_bytes in {runs!r}:
+    if max_partition_bytes is not None:
+        spark.conf.set("spark.sql.files.maxPartitionBytes",
+                       str(max_partition_bytes))
+    out = os.path.join({out!r}, name)
+    summary = run_pipeline(spark, {inp!r}, out, n_units=4, n_buckets=8,
+                           resume=False)
+    batches = {{}}
+    for uid, rec in lineage.completed_units(out).items():
+        batches.setdefault(rec["batch"], rec["batch_units"])
+    sinks = os.path.join(out, "sinks")
+    print("PROBE " + json.dumps({{
+        "name": name,
+        "out": out,
+        "summary": summary,
+        "batches": batches,
+        "cells": {{b: len(glob.glob(os.path.join(sinks, b, "sink_sev=*",
+                                                "sink_key=*")))
+                  for b in batches}},
+        "files": len(glob.glob(os.path.join(sinks, "*", "sink_sev=*",
+                                            "sink_key=*", "*.parquet"))),
+    }}))
 spark.stop()
-batches = {{}}
-for uid, rec in lineage.completed_units({out!r}).items():
-    batches.setdefault(rec["batch"], rec["batch_units"])
-sinks = os.path.join({out!r}, "sinks")
-print("PROBE " + json.dumps({{
-    "summary": summary,
-    "batches": batches,
-    "cells": {{b: len(glob.glob(os.path.join(sinks, b, "sink_sev=*",
-                                            "sink_key=*")))
-              for b in batches}},
-    "files": len(glob.glob(os.path.join(sinks, "*", "sink_sev=*",
-                                        "sink_key=*", "*.parquet"))),
-}}))
 """
 
 
-def test_batches_on_four_cores(input_dir, tmp_path):
-    """On local[4] two units are in flight, so 4 units run as 2 write
-    jobs, and each batch writes one file per sink cell: files per run
-    are the sum of cells per batch.  Its own driver process, for a
-    4-core session."""
+@pytest.fixture(scope="module")
+def four_core_runs(input_dir, tmp_path_factory):
+    """Two runs in their own local[4] driver process: one at Spark's
+    default conf, one with ``spark.sql.files.maxPartitionBytes`` at
+    half the input bytes / 4, so a scan wave (that × 4 cores) holds
+    about half the input."""
     import json
     import subprocess
     import sys
 
+    tmp = tmp_path_factory.mktemp("four_cores")
+    input_bytes = sum(os.path.getsize(os.path.join(input_dir, f))
+                      for f in os.listdir(input_dir) if f.endswith(".parquet"))
+    runs = [("default", None), ("half_wave", input_bytes // 2 // 4)]
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    script = tmp_path / "probe.py"
+    script = tmp / "probe.py"
     script.write_text(BATCH_PROBE.format(
-        root=root, inp=input_dir, out=str(tmp_path / "out")))
+        root=root, inp=input_dir, out=str(tmp / "out"), runs=runs))
     env = dict(os.environ, PYSPARK_PYTHON=sys.executable,
                PYSPARK_DRIVER_PYTHON=sys.executable)
-    run = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+    run = subprocess.run([sys.executable, str(script)], cwd=tmp, env=env,
                          capture_output=True, text=True, timeout=600)
     assert run.returncode == 0, run.stderr[-4000:]
-    line = next(l for l in run.stdout.splitlines() if l.startswith("PROBE "))
-    got = json.loads(line[len("PROBE "):])
+    got = [json.loads(l[len("PROBE "):]) for l in run.stdout.splitlines()
+           if l.startswith("PROBE ")]
+    return {g["name"]: g for g in got}
+
+
+def test_one_batch_under_one_scan_wave(four_core_runs):
+    """At Spark's default conf the 4,000-row input is far under one scan
+    wave (128 MB × 4 cores), so its 4 units run as ONE write job, and
+    that batch writes one file per sink cell."""
+    got = four_core_runs["default"]
     assert got["summary"]["complete"]
     assert got["summary"]["rows_valid"] + got["summary"]["rows_dlq"] == N_ROWS
-    assert got["batches"] == {"batch=0000": ["0000", "0001"],
-                              "batch=0002": ["0002", "0003"]}
+    assert got["batches"] == {"batch=0000": ["0000", "0001", "0002", "0003"]}
     assert got["files"] == sum(got["cells"].values()) > 0
+
+
+def test_batches_split_at_a_smaller_scan_wave(spark, four_core_runs):
+    """With a scan wave of about half the input, the same run writes at
+    least 2 batches, each of whole units in order, and its sink rows and
+    metrics equal the one-batch run's."""
+    import pandas as pd
+
+    one, split = four_core_runs["default"], four_core_runs["half_wave"]
+    assert split["summary"]["complete"]
+    assert len(split["batches"]) >= 2
+    assert [u for b in sorted(split["batches"])
+            for u in split["batches"][b]] == ["0000", "0001", "0002", "0003"]
+    assert split["files"] == sum(split["cells"].values())
+    rows = [spark.read.parquet(os.path.join(g["out"], "sinks"))
+            .select(*KEY_COLS) for g in (one, split)]
+    assert rows[0].exceptAll(rows[1]).isEmpty()
+    assert rows[1].exceptAll(rows[0]).isEmpty()
+    pd.testing.assert_frame_equal(
+        pd.read_parquet(os.path.join(split["out"], "metrics")),
+        pd.read_parquet(os.path.join(one["out"], "metrics")),
+    )
+
+
+def _units(*sizes):
+    """Units ``u0, u1, …`` with one file each, of the given byte sizes."""
+    units = [(f"u{i}", [f"f{i}"]) for i in range(len(sizes))]
+    return units, {f"f{i}": n for i, n in enumerate(sizes)}
+
+
+def test_plan_batches_keeps_order_and_whole_units():
+    from go_parsesyslog_spark.plans.pipeline import plan_batches
+
+    units = [("a", ["a1", "a2"]), ("b", ["b1"]), ("c", ["c1", "c2"])]
+    sizes = {"a1": 3, "a2": 3, "b1": 4, "c1": 2, "c2": 2}
+    assert plan_batches(units, sizes, 10) == [units[:2], units[2:]]
+    assert plan_batches(units, sizes, 100) == [units]
+
+
+def test_plan_batches_unit_larger_than_a_wave_goes_alone():
+    from go_parsesyslog_spark.plans.pipeline import plan_batches
+
+    units, sizes = _units(2, 50, 2, 2)
+    assert plan_batches(units, sizes, 10) == [
+        units[:1], units[1:2], units[2:]]
+    units, sizes = _units(50)
+    assert plan_batches(units, sizes, 10) == [units]
+
+
+def test_plan_batches_exact_fit_boundary():
+    from go_parsesyslog_spark.plans.pipeline import plan_batches
+
+    units, sizes = _units(4, 6, 1)
+    assert plan_batches(units, sizes, 10) == [units[:2], units[2:]]
+    assert plan_batches(units, sizes, 9) == [units[:1], units[1:]]
+
+
+def test_plan_batches_nothing_pending():
+    from go_parsesyslog_spark.plans.pipeline import plan_batches
+
+    assert plan_batches([], {}, 10) == []
+
+
+def test_footer_schemas_match_spark_inference(spark, input_dir,
+                                              pipeline_out):
+    """The batch read and the sink read-back take their schemas from
+    parquet footers.  Column names, types and nullability equal what
+    Spark infers for the same files (timestamps included: the input's
+    ``ts`` is TIMESTAMP_NTZ, the sink's ``msg_ts`` a Spark TIMESTAMP),
+    except ``batch``, which stays a string where inference makes
+    ``0000`` an int."""
+    from go_parsesyslog_spark.plans import lineage
+    from go_parsesyslog_spark.plans.pipeline import _read_sinks
+    from go_parsesyslog_spark.sources.tableformat import parquet_footer_schema
+
+    files = sorted(os.path.join(input_dir, f) for f in os.listdir(input_dir)
+                   if f.endswith(".parquet"))
+    got = spark.read.schema(parquet_footer_schema(files[0])).parquet(*files)
+    assert got.schema == spark.read.parquet(*files).schema
+
+    out, _ = pipeline_out
+    committed = lineage.completed_units(out)
+    got = _read_sinks(spark, out, committed).schema
+    want = spark.read.option("basePath", os.path.join(out, "sinks")).parquet(
+        *sorted({lineage.batch_dir(out, r["batch"])
+                 for r in committed.values()})).schema
+    assert got.names == want.names
+    for g, w in zip(got.fields, want.fields):
+        if g.name == "batch":
+            assert (g.dataType.simpleString(), w.dataType.simpleString()) == (
+                "string", "int")
+        else:
+            assert g == w, (g, w)
+
+
+def test_pipeline_reads_are_built_without_jobs(spark, input_dir,
+                                               pipeline_out):
+    """Building a batch's write input and the sink read-back runs no
+    Spark job: no schema inference.  Counted with a job group and the
+    status tracker."""
+    from go_parsesyslog_spark.plans import lineage
+    from go_parsesyslog_spark.plans.pipeline import _read_sinks, sink_frame
+
+    files = sorted(os.path.join(input_dir, f) for f in os.listdir(input_dir)
+                   if f.endswith(".parquet"))
+    out, _ = pipeline_out
+    sc = spark.sparkContext
+    group = "pipeline_reads_build"
+    sc.setJobGroup(group, group)
+    try:
+        sink_frame(spark, files, "auto", REF_NOW, 8)
+        _read_sinks(spark, out, lineage.completed_units(out))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_all_valid_input_keeps_string_sink_keys(spark, tmp_path_factory):
+    """An input with no DLQ row has only digit sink keys (conv buckets)
+    and the batch directory ``batch=0000``: both stay strings in the
+    metrics file and in the read-back, as on an input with DLQ rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    inp = str(tmp_path_factory.mktemp("all_valid_in"))
+    write_transcripts_parquet(inp, 1000, seed=7, chunk_rows=500,
+                              corpus_frac=0.0)
+    out = str(tmp_path_factory.mktemp("all_valid_out"))
+    s = run_pipeline(spark, inp, out, n_units=2, n_buckets=8, resume=False)
+    assert s["complete"] and s["rows_dlq"] == 0 and s["rows_valid"] == 1000
+    schema = pq.read_schema(os.path.join(out, "metrics", "part-00000.parquet"))
+    assert schema.field("sink_key").type == pa.string()
+    routed = read_routed(spark, out)
+    assert {r["batch"] for r in routed.select("batch").distinct().collect()} \
+        == {"0000"}
+    assert routed.schema["sink_key"].dataType.simpleString() == "string"
 
 
 def test_metrics_write_is_atomic(tmp_path, monkeypatch):

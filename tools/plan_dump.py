@@ -8,9 +8,9 @@ Each ``name`` is a key of ``__spark_entry__.queries()``, one of
 ``parse_logs:native`` / ``parse_logs:arrow``: the parse engine over one
 transcript file generated with perfbench's ``mixed_batch`` mix, with the
 pipeline's arguments, or ``pipeline_batch``: the fan-out write input
-(``plans.pipeline.sink_frame``) of one batch, the first two of
-perfbench's four units over eight such files — the batch a 4-core run
-writes first.  With no names, ``DEFAULT_NAMES`` are dumped.
+(``plans.pipeline.sink_frame``) of perfbench's four units over eight
+such files — one batch, as the input is under one scan wave.  With no
+names, ``DEFAULT_NAMES`` are dumped.
 Building a query may run Spark jobs (schema inference, probes, eager
 checkpoints); no query is collected.
 
@@ -74,7 +74,7 @@ def batch_plan(spark, input_dir: str):
                                   chunk_rows=PARSE_ROWS // 8,
                                   **WORKLOADS["mixed_batch"].gen)
     units = plan_units(input_dir, N_UNITS)
-    files = [f for _, members in units[:2] for f in members]
+    files = [f for _, members in units for f in members]
     return sink_frame(spark, files, "auto", REF_NOW, N_BUCKETS)
 
 
